@@ -567,7 +567,9 @@ def union_find(pairs: list[tuple[str, str]]) -> dict[str, str]:
 
 
 def canonical_map(
-    onto_terms: DataFrame, equiv_edges: DataFrame, small_threshold: int = 1_000_000
+    onto_terms: DataFrame,
+    equiv_edges: DataFrame | list[tuple[str, str]],
+    small_threshold: int = 1_000_000,
 ) -> DataFrame:
     """(term_id, canonical_id): canonical = min(CURIE) of the term's component.
 
@@ -577,18 +579,20 @@ def canonical_map(
     already-tiny frame instead of a multi-round distributed fixpoint. Larger
     graphs (e.g. cross-document canonicalization) fall through to the
     star-contraction :func:`connected_components`.
+
+    ``equiv_edges`` may also be the driver-side pair list itself (an
+    ontology's xrefs): it is then solved with no Spark job at all.
     """
-    src, dst = equiv_edges.columns[:2]
-    n_edges = equiv_edges.count()
-    if n_edges <= small_threshold:
+    if isinstance(equiv_edges, list):
+        pairs, spark = equiv_edges, onto_terms.sparkSession
+    else:
+        src, dst = equiv_edges.columns[:2]
+        if equiv_edges.count() > small_threshold:
+            cc = connected_components(equiv_edges, nodes=onto_terms.select("id"))
+            return cc.filter(F.col("id") != F.col("component")).select(
+                F.col("id").alias("term_id"), F.col("component").alias("canonical_id")
+            )
         pairs = [(r[0], r[1]) for r in equiv_edges.select(src, dst).collect()]
-        mapping = union_find(pairs)
-        changed = sorted((k, v) for k, v in mapping.items() if k != v)
         spark = equiv_edges.sparkSession
-        if not changed:
-            return spark.createDataFrame([], "term_id string, canonical_id string")
-        return spark.createDataFrame(changed, "term_id string, canonical_id string")
-    cc = connected_components(equiv_edges, nodes=onto_terms.select("id"))
-    return cc.filter(F.col("id") != F.col("component")).select(
-        F.col("id").alias("term_id"), F.col("component").alias("canonical_id")
-    )
+    changed = sorted((k, v) for k, v in union_find(pairs).items() if k != v)
+    return spark.createDataFrame(changed, "term_id string, canonical_id string")

@@ -7,9 +7,10 @@ The distributed analog of the reference's run_transform per-ontology loop
         -> extract_mentions (Arrow scan, no shuffle)
         -> canonical rewrite (broadcast join)
         -> co-mention edges (one shuffle on turn key) + mentioned-node ids
-        -> per-unit-batch atomic commit + lineage + unit-done markers
+        -> per-unit-batch atomic commit + ONE lineage commit (stage rows and
+           unit-done markers together)
     finalize: nodes (broadcast dict join) + is_a edges (global semi-join)
-        -> KGX node/edge snapshots + tracking rotation
+        -> KGX node/edge snapshots + one lineage commit + tracking rotation
 
 Gate ordering mirrors the reference: lock check -> tracking check -> work ->
 track_version -> unlock (transform.py:765-794,1195,1322-1328); a crash between
@@ -20,16 +21,24 @@ Scale notes: units are hash buckets of conv_id, so resume granularity is
 independent of conversation count; all per-unit stages are conv-local (no
 cross-bucket shuffle); only the finalize stage sees global state (distinct node
 ids — tiny relative to input).
+
+Bookkeeping runs no Spark job of its own: a batch's input and error counts
+are observed (``DataFrame.observe``) on its mentions commit job, its
+per-partition lineage rows come from that commit's parquet footers, the
+canonical map is solved on the driver, and snapshot reads carry the schema the
+commit recorded. Only the crash-window replay (the tagged commit is skipped,
+so there is no job to observe) counts its inputs with jobs.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from kg_obo_spark.datagen.ontology import Ontology
@@ -47,7 +56,7 @@ from kg_obo_spark.operators.materialize import (
     canonical_mentions,
     co_edges_from_mention_ranks,
 )
-from kg_obo_spark.plans.tracking import TrackingStore, partition_metrics
+from kg_obo_spark.plans.tracking import TrackingStore, partition_metrics, stage_rows
 from kg_obo_spark.sources.tableio import Lock, Table
 
 
@@ -81,7 +90,7 @@ def run_pipeline(
     exercise crash/resume.
     ``int_rank_edges``: per-unit co-mention edge representation (ROADMAP
     #13). None (default) auto-switches per unit batch: the batch's exact
-    turn count (``n_in``, already counted for lineage) against
+    turn count (``n_in``, observed on the mentions commit) against
     ``VOCAB_INT_CROSSOVER_TURNS`` — above it the pair shuffle carries int32
     ranks (re-ranked from the committed string-CURIE mention artifacts via a
     broadcast join; 1.7x on the edge stage at 2M convs,
@@ -110,18 +119,21 @@ def run_pipeline(
             "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
         )
         all_units = list(range(n_buckets))
-        units_df = spark.createDataFrame([(str(u),) for u in all_units], "unit string")
-        pending = sorted(
-            int(r["unit"]) for r in store.pending_units(units_df).collect()
-        )
+        if store.lineage.exists():
+            units_df = spark.createDataFrame(
+                [(str(u),) for u in all_units], "unit string"
+            )
+            pending = sorted(
+                int(r["unit"]) for r in store.pending_units(units_df).collect()
+            )
+        else:  # fresh output root: no unit is done, so no lookup job
+            pending = all_units
         skipped = sorted(set(all_units) - set(pending))
 
-        # canonicalization map: tiny, computed once, broadcast into every join
-        eq = spark.createDataFrame(
-            onto.xrefs or [("__none__", "__none__")], "a string, b string"
-        )
+        # canonicalization map: tiny, solved on the driver from the ontology's
+        # own xref pairs (no Spark job), broadcast into every join
         terms_df = spark.createDataFrame([(t["id"],) for t in onto.terms], "id string")
-        cmap = canonical_map(terms_df, eq)
+        cmap = canonical_map(terms_df, list(onto.xrefs))
 
         # Persist the batching geometry (ADVICE r3): unit_tag encodes the batch
         # composition, so a resume after a crash-window crash MUST chunk the
@@ -134,8 +146,12 @@ def run_pipeline(
             with open(cfg_path) as f:
                 unit_batch_size = json.load(f).get("unit_batch_size")
         else:
-            with open(cfg_path, "w") as f:
+            # temp file + atomic rename: a crash mid-write leaves a stray temp
+            # file, never a truncated config that resume's json.load rejects
+            tmp_path = cfg_path + ".tmp"
+            with open(tmp_path, "w") as f:
                 json.dump({"unit_batch_size": unit_batch_size}, f)
+            os.replace(tmp_path, cfg_path)
         batch = unit_batch_size or max(len(pending), 1)
         batches = [pending[i : i + batch] for i in range(0, len(pending), batch)]
         done_batches = 0
@@ -149,13 +165,6 @@ def run_pipeline(
         rank_cu = None  # lazily-built canonical rank table (ROADMAP #13)
         for units in batches:
             sub = tr.filter(F.col("bucket").isin(units))
-            valid, errors = split_valid_turns(sub)
-            n_err = errors.count()
-            n_in = sub.count()
-            if n_err:
-                store.log_stage(
-                    spark, run_id, "input_errors", rows_in=n_in, rows_out=n_err
-                )
             # one extraction pass: commit mentions, then derive edges from the
             # just-written parquet (never rescan the corpus, never recompute
             # the Arrow extraction stage). Repair ladder: a candidate-budget
@@ -167,9 +176,17 @@ def run_pipeline(
             # deterministic, so the landed snapshot IS this batch's result).
             unit_tag = "units-" + "-".join(str(u) for u in units)
             snap_m = None
+            degraded = []  # remap_count of each ladder step taken
             for level in range(ladder_top + 1):
+                # the batch's input and valid-row counts ride on the commit
+                # job; a failed job fills no Observation, so each attempt
+                # observes afresh
+                seen_in, seen_valid = Observation(), Observation()
+                valid, errors = split_valid_turns(
+                    sub.observe(seen_in, F.count(F.lit(1)).alias("n"))
+                )
                 mentions = extract_mentions(
-                    valid,
+                    valid.observe(seen_valid, F.count(F.lit(1)).alias("n")),
                     onto,
                     degradation_level=level,
                     max_candidates_per_turn=max_candidates_per_turn,
@@ -185,22 +202,33 @@ def run_pipeline(
                     # message — robust to Py4J/traceback re-framing and immune
                     # to unrelated errors that merely mention the class name
                     if level >= ladder_top or EXTRACTION_BUDGET_MARKER not in str(ex):
+                        if degraded:
+                            # the ladder's steps stay on record although the
+                            # batch fails; the failed job observed nothing
+                            store.commit_lineage(
+                                spark,
+                                _input_rows(
+                                    run_id, sub.count(), errors.count(), degraded
+                                ),
+                                meta={"stage": "extract_degraded"},
+                            )
                         raise
-                    store.log_stage(
-                        spark,
-                        run_id,
-                        "extract_degraded",
-                        rows_in=n_in,
-                        rows_out=0,
-                        remap_count=level + 1,
-                    )
+                    degraded.append(level + 1)
                     continue
                 break
+            seen = None
             if snap_m is None:  # crash-window replay: this batch already landed
                 # O(1) marker-file lookup, not an O(total commits) history scan
                 # (VERDICT r3 missing #3)
                 snap_m = mentions_t.snapshot_by_tag(unit_tag)
-            batch_mentions = spark.read.parquet(json.loads(snap_m.data_dir)[-1])
+            else:
+                seen = _observed(seen_in, seen_valid)
+            if seen is None:  # no commit job ran (or reported): count
+                n_in, n_err = sub.count(), errors.count()
+            else:
+                n_in, n_err = seen[0], seen[0] - seen[1]
+            batch_dir = json.loads(snap_m.data_dir)[-1]
+            batch_mentions = spark.read.schema(cm.schema).parquet(batch_dir)
             use_ranks = (
                 int_rank_edges
                 if int_rank_edges is not None
@@ -229,24 +257,25 @@ def run_pipeline(
             )
             if snap_e is None:
                 snap_e = co_edges_t.snapshot_by_tag(unit_tag)
-            store.log_stage(
-                spark,
+            # the batch's whole lineage lands in the unit-done commit, so a
+            # crash before it replays the batch without duplicate rows
+            stages = _input_rows(run_id, n_in, n_err, degraded)
+            stages += stage_rows(
                 run_id,
                 "extract+link",
-                rows_in=n_in,
-                rows_out=snap_m.meta["batch_rows"],
+                n_in,
+                snap_m.meta["batch_rows"],
                 snapshot_id=snap_m.snapshot_id,
-                per_partition=partition_metrics(batch_mentions),
+                per_partition=partition_metrics(batch_dir),
             )
-            store.log_stage(
-                spark,
+            stages += stage_rows(
                 run_id,
                 "co_edges",
-                rows_in=snap_m.meta["batch_rows"],
-                rows_out=snap_e.meta["batch_rows"],
+                snap_m.meta["batch_rows"],
+                snap_e.meta["batch_rows"],
                 snapshot_id=snap_e.snapshot_id,
             )
-            store.mark_units_done(spark, run_id, [str(u) for u in units])
+            store.mark_units_done(spark, run_id, [str(u) for u in units], stages)
             done_batches += 1
             if fail_after_batches is not None and done_batches >= fail_after_batches:
                 raise RuntimeError(f"injected failure after {done_batches} batches")
@@ -264,11 +293,15 @@ def run_pipeline(
 
         ns = nodes_t.commit(nodes, meta={"run_id": run_id})
         es = edges_t.commit(edges, meta={"run_id": run_id})
-        store.log_stage(
-            spark, run_id, "materialize_nodes", 0, ns.row_count, snapshot_id=ns.snapshot_id
-        )
-        store.log_stage(
-            spark, run_id, "materialize_edges", 0, es.row_count, snapshot_id=es.snapshot_id
+        store.commit_lineage(
+            spark,
+            stage_rows(
+                run_id, "materialize_nodes", 0, ns.row_count, snapshot_id=ns.snapshot_id
+            )
+            + stage_rows(
+                run_id, "materialize_edges", 0, es.row_count, snapshot_id=es.snapshot_id
+            ),
+            meta={"stage": "materialize"},
         )
         store.track_version(
             spark, onto.name, f"urn:kg-obo-spark:{onto.name}", onto.version
@@ -283,3 +316,29 @@ def run_pipeline(
         )
     finally:
         lock.release()
+
+
+def _input_rows(
+    run_id: str, n_in: int, n_err: int, degraded: list[int]
+) -> list[tuple]:
+    """A batch's ``input_errors`` row (when any input row was diverted) and
+    one ``extract_degraded`` row per repair-ladder step it took."""
+    rows = stage_rows(run_id, "input_errors", n_in, n_err) if n_err else []
+    for remap in degraded:
+        rows += stage_rows(run_id, "extract_degraded", n_in, 0, remap)
+    return rows
+
+
+def _observed(*observations: Observation, timeout_s: float = 60.0) -> list[int] | None:
+    """The ``n`` each Observation saw on the job that ran its frame, or None
+    if one has not reported within ``timeout_s``. Spark completes an
+    Observation from a listener event after the job returns;
+    ``Observation.get`` would wait for it forever, so a lost event must not
+    hang the run."""
+    deadline = time.monotonic() + timeout_s
+    for obs in observations:
+        while not obs._jo.future().isCompleted():
+            if time.monotonic() > deadline:
+                return None
+            time.sleep(0.002)
+    return [obs.get["n"] for obs in observations]

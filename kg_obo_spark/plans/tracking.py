@@ -11,18 +11,24 @@ Semantics mirrored from the reference's tracking.yaml + lock + mapcount trio:
   work units against the tracking table: the incremental-compute primitive.
 - ``lineage(stage, partition_id, rows_in, rows_out, ...)`` per-partition metrics
   — the distributed analog of the reference's remap-hit counter reporting
-  (transform.py:626,661-664), committed with each stage snapshot.
+  (transform.py:626,661-664). A pipeline unit batch lands all of its stage
+  rows and its ``unit_done`` markers in ONE lineage commit
+  (:meth:`TrackingStore.mark_units_done`), so the lineage of a batch is
+  written exactly once, together with the marker that makes resume skip it.
+  Row counts come from the jobs that already ran (``DataFrame.observe`` on the
+  commit job, parquet footers of the commit) — never from extra count jobs.
 """
 
 from __future__ import annotations
 
 import os
+import re
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kg_obo_spark.sources.tableio import Table
+from kg_obo_spark.sources.tableio import Table, parquet_file_rows
 
 TRACKING_SCHEMA = (
     "source string, current_iri string, current_version string, "
@@ -64,11 +70,13 @@ class TrackingStore:
         self, spark: SparkSession, source: str, iri: str, version: str
     ) -> None:
         """Rotate current into archive and install the new version
-        (transform.py:381-395)."""
-        cur = self.read_tracking(spark)
-        mine = cur.filter(F.col("source") == source)
-        others = cur.filter(F.col("source") != source)
-        row = mine.first()
+        (transform.py:381-395). A first version on a fresh table runs no
+        lookup job: there is nothing to rotate."""
+        others, row = None, None
+        if self.tracking.exists():
+            cur = self.tracking.read(spark)
+            others = cur.filter(F.col("source") != source)
+            row = cur.filter(F.col("source") == source).first()
         if row is None:
             archive = []
         else:
@@ -82,7 +90,9 @@ class TrackingStore:
             [(source, iri, version, [(a["iri"], a["version"]) for a in archive])],
             TRACKING_SCHEMA,
         )
-        self.tracking.commit(others.unionByName(new_row), meta={"source": source})
+        if others is not None:
+            new_row = others.unionByName(new_row)
+        self.tracking.commit(new_row, meta={"source": source})
 
     # ------------------------------------------------------------ resume
 
@@ -101,25 +111,35 @@ class TrackingStore:
         return work_units.join(F.broadcast(done), done_key, "left_anti")
 
     def mark_units_done(
-        self, spark: SparkSession, run_id: str, units: list[str]
+        self,
+        spark: SparkSession,
+        run_id: str,
+        units: list[str],
+        stages: list[tuple] = (),
     ) -> None:
-        """Record a whole unit batch in ONE lineage commit — one write job and
-        one snapshot per batch instead of per unit (VERDICT r2 missing #2:
-        per-unit commits made resume bookkeeping O(units) snapshots)."""
+        """Record a whole unit batch in ONE lineage commit: the batch's
+        ``stages`` rows (from :func:`stage_rows`) plus one ``unit_done`` marker
+        per unit — one write job and one snapshot per batch instead of per
+        unit or per stage (VERDICT r2 missing #2). The stage rows and the
+        markers land atomically, so a crash before this commit replays the
+        batch without having written any of its lineage."""
         if not units:
             return
-        now = datetime.now(timezone.utc).replace(tzinfo=None)
-        rows = [(run_id, "unit_done", -1, 0, 0, 0, u, now) for u in units]
-        self.lineage.commit(
-            spark.createDataFrame(rows, LINEAGE_SCHEMA),
-            mode="append",
-            meta={"units": units},
-        )
-
-    def mark_unit_done(self, spark: SparkSession, run_id: str, unit: str) -> None:
-        self.mark_units_done(spark, run_id, [unit])
+        now = _now()
+        rows = list(stages) + [
+            (run_id, "unit_done", -1, 0, 0, 0, u, now) for u in units
+        ]
+        self.commit_lineage(spark, rows, meta={"units": units})
 
     # ------------------------------------------------------------ lineage
+
+    def commit_lineage(
+        self, spark: SparkSession, rows: list[tuple], meta: dict | None = None
+    ) -> None:
+        """Append ``LINEAGE_SCHEMA`` rows as one lineage snapshot."""
+        self.lineage.commit(
+            spark.createDataFrame(rows, LINEAGE_SCHEMA), mode="append", meta=meta
+        )
 
     def log_stage(
         self,
@@ -130,34 +150,46 @@ class TrackingStore:
         rows_out: int,
         remap_count: int = 0,
         snapshot_id: str = "",
-        per_partition: DataFrame | None = None,
     ) -> None:
-        """Append stage metrics; ``per_partition`` may carry per-partition rows
-        (partition_id, rows_in, rows_out) computed via spark_partition_id()."""
-        now = datetime.now(timezone.utc).replace(tzinfo=None)
-        rows = [(run_id, stage, -1, rows_in, rows_out, remap_count, snapshot_id, now)]
-        df = spark.createDataFrame(rows, LINEAGE_SCHEMA)
-        if per_partition is not None:
-            pp = per_partition.select(
-                F.lit(run_id).alias("run_id"),
-                F.lit(stage).alias("stage"),
-                F.col("partition_id").cast("int"),
-                F.col("rows_in").cast("long"),
-                F.col("rows_out").cast("long"),
-                F.lit(0).cast("long").alias("remap_count"),
-                F.lit(snapshot_id).alias("snapshot_id"),
-                F.lit(now).alias("committed_at"),
-            )
-            df = df.unionByName(pp)
-        self.lineage.commit(df, mode="append", meta={"stage": stage})
+        """Append one stage's summary row as its own lineage commit."""
+        self.commit_lineage(
+            spark,
+            stage_rows(run_id, stage, rows_in, rows_out, remap_count, snapshot_id),
+            meta={"stage": stage},
+        )
 
 
-def partition_metrics(df: DataFrame) -> DataFrame:
-    """(partition_id, rows_in, rows_out) for a frame — rows_in == rows_out here;
-    stages that filter report both sides."""
-    return (
-        df.withColumn("partition_id", F.spark_partition_id())
-        .groupBy("partition_id")
-        .agg(F.count("*").alias("rows_out"))
-        .withColumn("rows_in", F.col("rows_out"))
-    )
+def _now() -> datetime:
+    return datetime.now(timezone.utc).replace(tzinfo=None)
+
+
+def stage_rows(
+    run_id: str,
+    stage: str,
+    rows_in: int,
+    rows_out: int,
+    remap_count: int = 0,
+    snapshot_id: str = "",
+    per_partition: list[tuple[int, int]] = (),
+) -> list[tuple]:
+    """``LINEAGE_SCHEMA`` rows of one stage: the summary row
+    (``partition_id = -1``), then one row per (partition_id, rows) entry
+    (rows_in == rows_out there)."""
+    now = _now()
+    return [(run_id, stage, -1, rows_in, rows_out, remap_count, snapshot_id, now)] + [
+        (run_id, stage, p, n, n, 0, snapshot_id, now) for p, n in per_partition
+    ]
+
+
+def partition_metrics(data_dir: str) -> list[tuple[int, int]]:
+    """[(partition_id, rows)] of a committed data dir, read from its parquet
+    footers: a part file's index is the id of the write task that produced
+    it. Metadata only — no Spark job. Empty part files are skipped, as a
+    count over the data would never report them."""
+    per: dict[int, int] = {}
+    for rel, n in parquet_file_rows(data_dir).items():
+        m = re.match(r"part-(\d+)", os.path.basename(rel))
+        if m and n:
+            pid = int(m.group(1))
+            per[pid] = per.get(pid, 0) + n
+    return sorted(per.items())

@@ -54,18 +54,24 @@ class CommitConflictError(RuntimeError):
     (Iceberg's validation failure on rewrite conflicts). Recompute and retry."""
 
 
-def _parquet_row_count(data_dir: str) -> int:
-    """Sum row counts from parquet footers under ``data_dir`` (recursing into
-    hive partition dirs) — the Iceberg manifest-stats analog: row counts come
-    from metadata the write already produced, not a second scan of the data."""
+def parquet_file_rows(data_dir: str) -> dict[str, int]:
+    """{part-file name: row count} from the parquet footers under ``data_dir``
+    (recursing into hive partition dirs) — the Iceberg manifest-stats analog:
+    row counts come from metadata the write already produced, not a second
+    scan of the data."""
     import pyarrow.parquet as pq
 
-    total = 0
+    rows = {}
     for base, _dirs, files in os.walk(data_dir):
         for fn in files:
             if fn.endswith(".parquet"):
-                total += pq.read_metadata(os.path.join(base, fn)).num_rows
-    return total
+                path = os.path.join(base, fn)
+                rows[os.path.relpath(path, data_dir)] = pq.read_metadata(path).num_rows
+    return rows
+
+
+def _parquet_row_count(data_dir: str) -> int:
+    return sum(parquet_file_rows(data_dir).values())
 
 
 @dataclass
@@ -306,6 +312,14 @@ class Table:
                     or prev.meta.get("merged_schema")
                 ):
                     meta["merged_schema"] = True
+            if not partition_by and (
+                len(dirs) == 1
+                or ("read_schema" in prev.meta and not meta.get("merged_schema"))
+            ):
+                # every dir of the chain is unpartitioned and holds this one
+                # schema: read() hands it to the reader instead of inferring
+                # it from footers, a Spark job per dir
+                meta["read_schema"] = df.schema.json()
             snap = Snapshot(
                 snapshot_id=snap_id,
                 parent_id=prev.snapshot_id if prev else None,
@@ -373,7 +387,16 @@ class Table:
                 raise FileNotFoundError(f"no committed snapshot in {self.root}")
         dirs = json.loads(snap.data_dir)
         reader = spark.read
-        if snap.meta.get("merged_schema"):
+        if snap.meta.get("read_schema"):
+            # the commit recorded the schema of a plain, single-schema chain:
+            # hand it to the reader, so no footer-inference job runs. Older
+            # snapshots, merged-schema chains and partitioned layouts infer.
+            from pyspark.sql.types import StructType
+
+            reader = reader.schema(
+                StructType.fromJson(json.loads(snap.meta["read_schema"]))
+            )
+        elif snap.meta.get("merged_schema"):
             # schema evolution: this snapshot's manifest records that the dir
             # chain holds more than one schema — pay the footer merge ONLY then
             # (Iceberg gets this from its schema registry; plain parquet needs

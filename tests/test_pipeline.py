@@ -142,6 +142,17 @@ def test_repair_ladder_exhausted_reraises(spark, onto, tmp_path):
             spark, poisoned, onto, str(tmp_path / "kg2"),
             n_buckets=1, max_candidates_per_turn=10,
         )
+    # the ladder's steps were committed to lineage before the re-raise: one
+    # extract_degraded row per level it stepped past, counting the one turn
+    from kg_obo_spark.dictionary import MAX_DEGRADATION_LEVEL
+
+    lin = TrackingStore(str(tmp_path / "kg2")).lineage.read(spark)
+    deg = lin.filter(F.col("stage") == "extract_degraded").collect()
+    assert sorted(r["remap_count"] for r in deg) == list(
+        range(1, MAX_DEGRADATION_LEVEL + 1)
+    )
+    assert {r["rows_in"] for r in deg} == {1}
+    assert lin.filter(F.col("stage") == "unit_done").count() == 0
 
 
 def test_ladder_trigger_survives_message_reframing(spark, onto, tmp_path):
@@ -176,7 +187,8 @@ def test_crash_before_unit_marker_does_not_duplicate_mentions(spark, onto, tmp_p
     from kg_obo_spark.sources.tableio import Table
 
     tr = generate_transcripts(spark, n_convs=60, seed=11, ontology=onto).cache()
-    clean = run_pipeline(spark, tr, onto, str(tmp_path / "clean"), n_buckets=2)
+    clean = run_pipeline(spark, tr, onto, str(tmp_path / "clean"), n_buckets=2,
+                         unit_batch_size=1)
     clean_triples = {(r["subject"], r["predicate"], r["object"])
                      for r in clean.edges.collect()}
     clean_mentions = clean.mentions.count()
@@ -184,11 +196,11 @@ def test_crash_before_unit_marker_does_not_duplicate_mentions(spark, onto, tmp_p
     orig = TrackingStore.mark_units_done
     calls = {"n": 0}
 
-    def crash_once(self, spark_, run_id, units):
+    def crash_once(self, *args, **kwargs):
         calls["n"] += 1
         if calls["n"] == 1:
             raise RuntimeError("injected crash before unit marker")
-        return orig(self, spark_, run_id, units)
+        return orig(self, *args, **kwargs)
 
     TrackingStore.mark_units_done = crash_once
     try:
@@ -203,6 +215,35 @@ def test_crash_before_unit_marker_does_not_duplicate_mentions(spark, onto, tmp_p
     assert got == clean_triples
     # the crashed batch's mentions were committed once, not twice
     assert Table(str(tmp_path / "kg" / "mentions")).read(spark).count() == clean_mentions
+    # ... and so was its lineage: one summary row per stage and unit batch,
+    # counting the same inputs as the uninterrupted run
+    clean_rows = _batch_summaries(spark, tmp_path / "clean")
+    rows = _batch_summaries(spark, tmp_path / "kg")
+    assert sorted(rows) == sorted(clean_rows)
+    assert all(len(v) == 1 for v in rows.values()), rows
+    assert rows == clean_rows
+
+
+def _batch_summaries(spark, root):
+    """{(stage, units of the batch): [rows_in of each summary row]} over the
+    per-batch lineage stages of a pipeline output root."""
+    from kg_obo_spark.sources.tableio import Table
+
+    units = {}
+    for name in ("mentions", "co_edges"):
+        for s in Table(str(root / name)).snapshots():
+            units[s.snapshot_id] = tuple(s.meta["units"])
+    out = {}
+    lin = TrackingStore(str(root)).lineage.read(spark)
+    for r in lin.filter(F.col("partition_id") == -1).collect():
+        if r["stage"] in ("extract+link", "co_edges"):
+            key = (r["stage"], units[r["snapshot_id"]])
+        elif r["stage"] == "unit_done":
+            key = (r["stage"], (int(r["snapshot_id"]),))
+        else:
+            continue
+        out.setdefault(key, []).append(r["rows_in"])
+    return out
 
 
 def test_resume_with_different_batch_size_does_not_duplicate(spark, onto, tmp_path):
@@ -223,11 +264,11 @@ def test_resume_with_different_batch_size_does_not_duplicate(spark, onto, tmp_pa
     orig = TrackingStore.mark_units_done
     calls = {"n": 0}
 
-    def crash_once(self, spark_, run_id, units):
+    def crash_once(self, *args, **kwargs):
         calls["n"] += 1
         if calls["n"] == 1:
             raise RuntimeError("injected crash before unit marker")
-        return orig(self, spark_, run_id, units)
+        return orig(self, *args, **kwargs)
 
     TrackingStore.mark_units_done = crash_once
     try:
@@ -256,3 +297,79 @@ def test_resume_with_different_batch_size_does_not_duplicate(spark, onto, tmp_pa
     got = {(r["subject"], r["predicate"], r["object"]) for r in res.edges.collect()}
     assert got == clean_triples
     assert Table(str(tmp_path / "kg" / "mentions")).read(spark).count() == clean_mentions
+
+
+def test_stray_run_config_temp_file_does_not_break_resume(
+    spark, onto, tmp_path, monkeypatch
+):
+    """The run config is written to a temp file and renamed into place, so a
+    crash mid-write leaves a truncated temp file, never a truncated config.
+    A stray truncated temp file next to the config must not break resume."""
+    import json
+    import os
+    import types
+
+    from kg_obo_spark.plans import pipeline
+
+    tr = generate_transcripts(spark, n_convs=40, seed=17, ontology=onto).cache()
+    clean = run_pipeline(spark, tr, onto, str(tmp_path / "clean"), n_buckets=2)
+    edges = lambda r: {tuple(x) for x in r.edges.collect()}  # noqa: E731
+    root = str(tmp_path / "kg")
+    cfg = os.path.join(root, "_run_config.json")
+
+    def read_cfg():
+        with open(cfg) as f:
+            return json.load(f)
+
+    def cut_short(obj, f):
+        f.write(json.dumps(obj)[:12])
+        raise OSError("injected crash mid-write")
+
+    # a crash while the first run writes its config
+    monkeypatch.setattr(
+        pipeline, "json", types.SimpleNamespace(**{**vars(json), "dump": cut_short})
+    )
+    with pytest.raises(OSError, match="mid-write"):
+        run_pipeline(spark, tr, onto, root, n_buckets=2, unit_batch_size=1)
+    monkeypatch.undo()
+    assert not os.path.exists(cfg) and os.path.exists(cfg + ".tmp")
+
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_pipeline(spark, tr, onto, root, n_buckets=2, unit_batch_size=1,
+                     fail_after_batches=1)
+    assert read_cfg() == {"unit_batch_size": 1}
+    with open(cfg + ".tmp", "w") as f:
+        f.write('{"unit_batch')  # a stray temp file from a cut-short write
+    res = run_pipeline(spark, tr, onto, root, n_buckets=2)
+    assert res.units_skipped and len(res.units_processed) == 1
+    assert read_cfg() == {"unit_batch_size": 1}
+    assert edges(res) == edges(clean)
+
+
+def test_fresh_single_batch_run_job_budget(spark, onto, transcripts, tmp_path):
+    """Bookkeeping launches no Spark job of its own: input counts are
+    observed on the mentions commit, partition rows come from its footers,
+    reads carry the committed schema, and one lineage commit covers the
+    batch. The budget is the measured job count of this call (15 at
+    local[4]); before those cuts it was 34."""
+    from tests.conftest import count_jobs
+
+    transcripts.count()  # materialize the cached input outside the count
+    with count_jobs(spark) as jobs:
+        run_pipeline(spark, transcripts, onto, str(tmp_path / "kg"), n_buckets=2)
+    assert jobs["n"] <= 15, jobs
+
+
+def test_observed_counts_time_out_instead_of_hanging(spark):
+    """Batch input counts are read from Observations of the commit job; one
+    whose job never ran (or never reported) yields None within the timeout,
+    and the pipeline then counts with jobs of its own."""
+    from pyspark.sql import Observation
+
+    from kg_obo_spark.plans.pipeline import _observed
+
+    ran, idle = Observation(), Observation()
+    spark.range(7).observe(ran, F.count(F.lit(1)).alias("n")).collect()
+    spark.range(3).observe(idle, F.count(F.lit(1)).alias("n"))  # no action
+    assert _observed(ran) == [7]
+    assert _observed(ran, idle, timeout_s=0.2) is None

@@ -536,3 +536,40 @@ def test_type_narrowing_across_append_chain_raises(spark):
     )
     with pytest.raises(ValueError, match="narrow"):
         t.read(spark).collect()
+
+
+def test_plain_snapshot_read_carries_schema_and_runs_no_job(spark, tmp_path):
+    """A commit records its frame's schema; reading a plain (unpartitioned,
+    single-schema) snapshot hands it to the reader, so no footer-inference
+    job runs, and the frame equals an inferred read in rows and schema."""
+    from datetime import datetime
+
+    from tests.conftest import count_jobs
+
+    df = spark.createDataFrame(
+        [
+            (1, "a", [1, 2], {"k": 1.5}, (7, "x"), datetime(2026, 1, 1)),
+            (2, None, [], {}, (8, None), datetime(2026, 1, 2)),
+        ],
+        "id long, s string, xs array<int>, m map<string,double>, "
+        "st struct<n:int, t:string>, ts timestamp",
+    )
+    t = Table(str(tmp_path / "plain"))
+    t.commit(df, mode="append")
+    t.commit(df, mode="append")  # same-schema append chain still qualifies
+    assert "read_schema" in t.latest().meta
+    with count_jobs(spark) as jobs:
+        got = t.read(spark)
+    assert jobs["n"] == 0
+    dirs = json.loads(t.latest().data_dir)
+    inferred = spark.read.parquet(dirs[0]).unionByName(spark.read.parquet(dirs[1]))
+    assert got.schema == inferred.schema
+    assert sorted(got.collect()) == sorted(inferred.collect())
+
+    # partitioned and merged-schema snapshots keep inference
+    p = Table(str(tmp_path / "part"))
+    p.commit(df, partition_by=["id"])
+    assert "read_schema" not in p.latest().meta
+    t.commit(df.withColumn("extra", F.lit(1)), mode="append")
+    assert t.latest().meta["merged_schema"] and "read_schema" not in t.latest().meta
+    assert t.read(spark).count() == 6
