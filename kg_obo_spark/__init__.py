@@ -17,4 +17,9 @@ reference is cited in docstrings only to pin down WHAT is computed (schemas,
 normalization rules, stats, resume semantics).
 """
 
+from kg_obo_spark import pyworker
+
 __version__ = "0.1.0"
+
+# Stat-guard zip-import invalidation in PySpark workers; no-op on the driver.
+pyworker.install_if_worker()

@@ -19,7 +19,11 @@ which by construction is small relative to the per-row compute it feeds.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
+
+_log = logging.getLogger(__name__)
 
 
 def ensure_scan_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -30,7 +34,9 @@ def ensure_scan_parallelism(df: DataFrame, min_partitions: int | None = None) ->
     distincts, or sorts downstream).
 
     The partition probe (``df.rdd.getNumPartitions()``) is driver-side
-    planning only — it launches no job."""
+    planning only — it launches no job. A spread is logged at INFO on
+    ``kg_obo_spark.partitioning`` (input -> target partitions); a no-op logs
+    nothing."""
     sc = df.sparkSession.sparkContext
     target = min_partitions or sc.defaultParallelism
     if target <= 1:
@@ -41,4 +47,5 @@ def ensure_scan_parallelism(df: DataFrame, min_partitions: int | None = None) ->
         return df
     if current >= target:
         return df
+    _log.info("scan spread: %d -> %d partitions", current, target)
     return df.repartition(target)

@@ -13,7 +13,8 @@ would back in production (SURVEY §7.0):
   user metadata — the lineage hook.
 - **mutex lock**: ``O_CREAT|O_EXCL`` marker file, the analog of the reference's
   zero-byte S3 lock object (/root/reference/kg_obo/upload.py:38-91, checked
-  before running at transform.py:765-784).
+  before running at transform.py:765-784); a lock whose holder died on this
+  host is taken over rather than left for a human to delete.
 - **idempotent publish**: ``commit(..., if_absent=True)`` skips when a snapshot
   with the same user tag exists — upload.py:124-138's head_object-then-skip.
 
@@ -38,6 +39,7 @@ from __future__ import annotations
 
 import json
 import os
+import socket
 import time
 import uuid
 from dataclasses import dataclass
@@ -580,26 +582,74 @@ def save_bucketed(
 
 
 class Lock:
-    """Exclusive run lock: atomic O_CREAT|O_EXCL marker file."""
+    """Exclusive run lock: an ``O_CREAT|O_EXCL`` marker file that records the
+    holder's host, pid and a random token.
+
+    A lock whose holder pid is dead on this host (a SIGKILLed or OOM-killed
+    run never reaches its ``release``) is taken over: the contender moves the
+    file aside under a name made from the dead holder's token, removes it and
+    retries the create. The move is a hard link, which fails when the name
+    exists (a rename would silently replace it), so exactly one contender
+    takes over each stale lock. A lock from another host, a live holder, and
+    a record without host, pid and token (written before locks carried them,
+    or another run's file between its create and its write) are always left
+    alone. ``release`` removes the file only while it still carries this
+    holder's token."""
 
     def __init__(self, path: str):
         self.path = path
+        self._token: str | None = None
 
     def held(self) -> bool:
         return os.path.exists(self.path)
 
     def acquire(self) -> None:
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        try:
-            fd = os.open(self.path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            raise LockHeldError(f"lock already held: {self.path}")
-        with os.fdopen(fd, "w") as f:
-            f.write(json.dumps({"pid": os.getpid(), "ts": time.time()}))
+        token = uuid.uuid4().hex
+        for _ in range(3):  # a lock file that vanished or was taken over: create again
+            try:
+                fd = os.open(self.path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            except FileExistsError:
+                if not self._take_over_stale():
+                    break
+                continue
+            with os.fdopen(fd, "w") as f:
+                f.write(json.dumps({
+                    "host": socket.gethostname(), "pid": os.getpid(),
+                    "token": token, "ts": time.time(),
+                }))
+            self._token = token
+            return
+        raise LockHeldError(f"lock already held: {self.path}")
 
     def release(self) -> None:
-        if os.path.exists(self.path):
+        token, self._token = self._token, None
+        if token is not None and (_lock_record(self.path) or {}).get("token") == token:
             os.remove(self.path)
+
+    def _take_over_stale(self) -> bool:
+        """Remove the lock file iff its holder is dead on this host. True when
+        the caller should retry the create."""
+        rec = _lock_record(self.path)
+        if rec is None:
+            return True  # released since the create failed
+        if not _holder_dead(rec):
+            return False
+        aside = f"{self.path}.stale-{rec['token']}"
+        try:
+            os.link(self.path, aside)
+        except FileNotFoundError:
+            return True  # removed since it was read
+        except OSError:  # another contender is taking it over, or no hard links
+            return False
+        try:
+            # the aside is whatever file the lock path held at link time; only
+            # the contender holding this token's aside name removes that file
+            if (_lock_record(aside) or {}).get("token") == rec["token"]:
+                os.remove(self.path)
+        finally:
+            os.remove(aside)
+        return True
 
     def __enter__(self) -> "Lock":
         self.acquire()
@@ -607,3 +657,34 @@ class Lock:
 
     def __exit__(self, *exc) -> None:
         self.release()
+
+
+def _lock_record(path: str) -> dict | None:
+    """A lock file's holder record: None when there is no file, {} when it
+    cannot be read as one."""
+    try:
+        with open(path) as f:
+            rec = json.load(f)
+    except FileNotFoundError:
+        return None
+    except (OSError, ValueError):
+        return {}
+    return rec if isinstance(rec, dict) else {}
+
+
+def _holder_dead(rec: dict) -> bool:
+    """True iff ``rec`` names a holder process on this host that is gone."""
+    pid, token = rec.get("pid"), rec.get("token")
+    if (
+        rec.get("host") != socket.gethostname()
+        or not isinstance(pid, int) or pid <= 0
+        or not isinstance(token, str) or not token.isalnum()
+    ):
+        return False
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return True
+    except PermissionError:  # alive under another uid
+        pass
+    return False

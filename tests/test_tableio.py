@@ -4,6 +4,9 @@ snapshot time-travel, lock mutex, tracking rotation."""
 import glob
 import json
 import os
+import socket
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F  # noqa: F401
@@ -59,6 +62,76 @@ def test_lock_mutex(tmp_path):
         with pytest.raises(LockHeldError):
             Lock(str(tmp_path / "L")).acquire()
     assert not lock.held()
+
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _dead_pid() -> int:
+    proc = subprocess.Popen([sys.executable, "-c", "pass"])
+    proc.wait()  # reaped: the pid names no process
+    return proc.pid
+
+
+def test_lock_taken_over_from_sigkilled_holder(tmp_path):
+    path = str(tmp_path / "L")
+    holder = subprocess.Popen(
+        [sys.executable, "-c",
+         "import sys, time\n"
+         "from kg_obo_spark.sources.tableio import Lock\n"
+         "Lock(sys.argv[1]).acquire()\n"
+         "print('held', flush=True)\n"
+         "time.sleep(600)\n",
+         path],
+        cwd=REPO, stdout=subprocess.PIPE, text=True,
+    )
+    try:
+        assert holder.stdout.readline().strip() == "held"
+        with pytest.raises(LockHeldError):  # live holder
+            Lock(path).acquire()
+        holder.kill()
+        holder.wait()
+        lock = Lock(path)
+        lock.acquire()
+        with open(path) as f:
+            rec = json.load(f)
+        assert (rec["host"], rec["pid"]) == (socket.gethostname(), os.getpid())
+        assert os.listdir(tmp_path) == ["L"]  # the moved-aside file is gone
+        lock.release()
+        assert not lock.held()
+    finally:
+        holder.kill()
+        holder.wait()
+
+
+@pytest.mark.parametrize("record", [
+    {"host": "not-" + socket.gethostname(), "pid": None, "token": "0a1b"},
+    {"pid": None, "ts": 0.0},  # written before locks carried host and token
+    "",  # between another run's create and its write
+])
+def test_lock_left_alone_unless_holder_provably_dead(tmp_path, record):
+    path = tmp_path / "L"
+    if isinstance(record, dict):
+        record = json.dumps(dict(record, pid=_dead_pid()))
+    path.write_text(record)
+    with pytest.raises(LockHeldError):
+        Lock(str(path)).acquire()
+    assert path.read_text() == record
+    assert os.listdir(tmp_path) == ["L"]
+
+
+def test_lock_release_only_by_token_owner(tmp_path):
+    path = str(tmp_path / "L")
+    lock = Lock(path)
+    lock.acquire()
+    Lock(path).release()  # never acquired: not the owner
+    assert lock.held()
+    with open(path) as f:
+        rec = json.load(f)
+    with open(path, "w") as f:  # as after a takeover by another run
+        json.dump(dict(rec, token="f" * 32), f)
+    lock.release()
+    assert lock.held()
 
 
 def test_tracking_rotation(spark, tmp_path):
