@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kg_obo_spark.session import local_frame
+
 OBO_IRI_PREFIX = "http://purl.obolibrary.org/obo/"
 
 # OBO:PREFIX_1234567 or OBO:prefix.OWL#PREFIX_1234567 -> PREFIX:1234567
@@ -146,7 +148,8 @@ def apply_id_update_map(
             if pfx and pfx[0].islower():
                 aug.setdefault(pfx.capitalize() + ":" + rest, new)
                 aug.setdefault(pfx.upper() + ":" + rest, new)
-    map_df = spark.createDataFrame(
+    map_df = local_frame(
+        spark,
         [(k, v) for k, v in sorted(aug.items())], "old_id string, new_id string"
     )
     out = df
@@ -422,7 +425,7 @@ def registry_delta_update(
         .distinct()
     )
     spark = e.sparkSession
-    empty = spark.createDataFrame([], "id string, component string")
+    empty = local_frame(spark, [], "id string, component string")
     # driver-side fast path (the canonical_map small-threshold pattern): a
     # micro-batch delta is tiny by design, and the distributed star-
     # contraction costs ~15 Spark jobs of fixed overhead per epoch. Below the
@@ -509,7 +512,7 @@ def _registry_delta_update_small(
     if not e_rows:
         return empty, 0, 0
     d_ids = sorted({x for p in e_rows for x in p})
-    d_nodes = spark.createDataFrame([(i,) for i in d_ids], "id string")
+    d_nodes = local_frame(spark, [(i,) for i in d_ids], "id string")
     lookup: dict[str, str] = {}
     if registry is not None:
         reg = prune_registry_to_delta(registry, d_nodes, n_buckets=n_buckets)
@@ -532,7 +535,7 @@ def _registry_delta_update_small(
     mapping = union_find(sorted(reduced))
     re_pairs = sorted((k, v) for k, v in mapping.items() if k != v)
     if registry is not None and re_pairs:
-        re_df = spark.createDataFrame(re_pairs, "component string, _newc string")
+        re_df = local_frame(spark, re_pairs, "component string, _newc string")
         changed_prev = registry.join(F.broadcast(re_df), "component").select(
             "id", F.col("_newc").alias("component")
         )
@@ -542,7 +545,7 @@ def _registry_delta_update_small(
         (i, mapping.get(i, i)) for i in d_ids if i not in lookup and i in mapping
     )
     if new_rows:
-        new_df = spark.createDataFrame(new_rows, "id string, component string")
+        new_df = local_frame(spark, new_rows, "id string, component string")
         return changed_prev.unionByName(new_df), n_reduced, 0
     return changed_prev, n_reduced, 0
 
@@ -595,4 +598,4 @@ def canonical_map(
         pairs = [(r[0], r[1]) for r in equiv_edges.select(src, dst).collect()]
         spark = equiv_edges.sparkSession
     changed = sorted((k, v) for k, v in union_find(pairs).items() if k != v)
-    return spark.createDataFrame(changed, "term_id string, canonical_id string")
+    return local_frame(spark, changed, "term_id string, canonical_id string")

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kg_obo_spark.datagen.ontology import Ontology
+from kg_obo_spark.session import local_frame
 
 EDGE_COLS = ["subject", "predicate", "object", "relation", "knowledge_source"]
 NODE_CORE_COLS = ["id", "category", "name", "description", "provided_by"]
@@ -271,7 +272,8 @@ def co_edges_from_mention_ranks(
     ``build_edges(mentions, onto, include_isa=False)`` — pinned by
     tests/test_materialize_ranks.py."""
     spark = mentions.sparkSession
-    rt = spark.createDataFrame(
+    rt = local_frame(
+        spark,
         [(str(s), i) for i, s in enumerate(cu)], "id string, r int"
     )
     per_turn = (
@@ -364,7 +366,7 @@ def isa_from_mentioned(mentioned: DataFrame, onto: Ontology) -> DataFrame:
     against a broadcast of it; at 100 TB the distinct() is the only shuffle and
     is bounded by dictionary size, not corpus size."""
     spark = mentioned.sparkSession
-    isa = spark.createDataFrame(onto.is_a, "subject string, object string")
+    isa = local_frame(spark, onto.is_a, "subject string, object string")
     m1 = mentioned.withColumnRenamed("id", "_sid")
     m2 = mentioned.withColumnRenamed("id", "_oid")
     return (
@@ -387,7 +389,8 @@ def build_nodes(mentions: DataFrame, onto: Ontology) -> DataFrame:
     — the MapType tail that models the reference's per-ontology annotation
     columns (SURVEY §1.1)."""
     spark = mentions.sparkSession
-    dict_df = spark.createDataFrame(
+    dict_df = local_frame(
+        spark,
         [
             (
                 t["id"],

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kg_obo_spark.session import local_frame
+
 REGISTRY_SCHEMA = "id string, title string, is_obsolete boolean"
 
 
@@ -21,7 +23,7 @@ def registry_from_entries(spark: SparkSession, entries: list[dict]) -> DataFrame
         (e.get("id"), e.get("title", ""), bool(e.get("is_obsolete", False)))
         for e in entries
     ]
-    return spark.createDataFrame(rows, REGISTRY_SCHEMA)
+    return local_frame(spark, rows, REGISTRY_SCHEMA)
 
 
 def filter_registry(

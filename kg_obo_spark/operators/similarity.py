@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kg_obo_spark.session import local_frame
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -380,7 +382,8 @@ def _seed_centroids(
             StructField("centroid_vec", vec_type, True),
         ]
     )
-    return embeddings.sparkSession.createDataFrame(
+    return local_frame(
+        embeddings.sparkSession,
         [(i + 1, r["centroid_vec"]) for i, r in enumerate(rows)], schema
     )
 

@@ -33,6 +33,7 @@ so there is no job to observe) counts its inputs with jobs.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import time
 import uuid
@@ -57,7 +58,10 @@ from kg_obo_spark.operators.materialize import (
     co_edges_from_mention_ranks,
 )
 from kg_obo_spark.plans.tracking import TrackingStore, partition_metrics, stage_rows
+from kg_obo_spark.session import local_frame
 from kg_obo_spark.sources.tableio import Lock, Table
+
+_log = logging.getLogger("kg_obo_spark.pipeline")
 
 
 @dataclass
@@ -120,8 +124,8 @@ def run_pipeline(
         )
         all_units = list(range(n_buckets))
         if store.lineage.exists():
-            units_df = spark.createDataFrame(
-                [(str(u),) for u in all_units], "unit string"
+            units_df = local_frame(
+                spark, [(str(u),) for u in all_units], "unit string"
             )
             pending = sorted(
                 int(r["unit"]) for r in store.pending_units(units_df).collect()
@@ -132,7 +136,7 @@ def run_pipeline(
 
         # canonicalization map: tiny, solved on the driver from the ontology's
         # own xref pairs (no Spark job), broadcast into every join
-        terms_df = spark.createDataFrame([(t["id"],) for t in onto.terms], "id string")
+        terms_df = local_frame(spark, [(t["id"],) for t in onto.terms], "id string")
         cmap = canonical_map(terms_df, list(onto.xrefs))
 
         # Persist the batching geometry (ADVICE r3): unit_tag encodes the batch
@@ -214,6 +218,10 @@ def run_pipeline(
                             )
                         raise
                     degraded.append(level + 1)
+                    _log.info(
+                        "repair ladder: %s candidate budget blown at level %d, "
+                        "retrying at level %d", unit_tag, level, level + 1,
+                    )
                     continue
                 break
             seen = None
@@ -233,6 +241,10 @@ def run_pipeline(
                 int_rank_edges
                 if int_rank_edges is not None
                 else n_in >= VOCAB_INT_CROSSOVER_TURNS
+            )
+            _log.info(
+                "edge path: %s n_in=%d -> %s", unit_tag, n_in,
+                "int ranks" if use_ranks else "strings",
             )
             if use_ranks:
                 if rank_cu is None:

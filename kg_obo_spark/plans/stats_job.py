@@ -21,6 +21,7 @@ from kg_obo_spark.operators.graph_stats import (
     format_fanout,
     graph_stats,
 )
+from kg_obo_spark.session import local_frame
 from kg_obo_spark.sources.kgx import write_tsv
 
 
@@ -65,14 +66,16 @@ def run_stats_job(
                 s.mean_node_degree,
             )
         )
-    details = spark.createDataFrame(
+    details = local_frame(
+        spark,
         detail_rows,
         "Name string, Version string, Nodes long, Edges long, CC_n long, "
         "CC_min long, CC_max long, Singletons long, MaxNodeDegree long, "
         "MeanNodeDegree string",
     )
 
-    size_df = spark.createDataFrame(
+    size_df = local_frame(
+        spark,
         [(n, v, f, s) for (n, v, f), s in sorted(sizes.items())],
         "Name string, Version string, Format string, Size long",
     )

@@ -28,6 +28,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kg_obo_spark.session import local_frame
 from kg_obo_spark.sources.tableio import Table, parquet_file_rows
 
 TRACKING_SCHEMA = (
@@ -51,7 +52,7 @@ class TrackingStore:
 
     def read_tracking(self, spark: SparkSession) -> DataFrame:
         if not self.tracking.exists():
-            return spark.createDataFrame([], TRACKING_SCHEMA)
+            return local_frame(spark, [], TRACKING_SCHEMA)
         return self.tracking.read(spark)
 
     def transformed_exists(self, spark: SparkSession, source: str, version: str) -> bool:
@@ -86,7 +87,8 @@ class TrackingStore:
                     archive.append(
                         {"iri": row["current_iri"], "version": row["current_version"]}
                     )
-        new_row = spark.createDataFrame(
+        new_row = local_frame(
+            spark,
             [(source, iri, version, [(a["iri"], a["version"]) for a in archive])],
             TRACKING_SCHEMA,
         )
@@ -138,7 +140,7 @@ class TrackingStore:
     ) -> None:
         """Append ``LINEAGE_SCHEMA`` rows as one lineage snapshot."""
         self.lineage.commit(
-            spark.createDataFrame(rows, LINEAGE_SCHEMA), mode="append", meta=meta
+            local_frame(spark, rows, LINEAGE_SCHEMA), mode="append", meta=meta
         )
 
     def log_stage(
@@ -160,6 +162,8 @@ class TrackingStore:
 
 
 def _now() -> datetime:
+    """Naive UTC now; ``local_frame`` stores it as that UTC instant on any
+    host, whatever the host's local zone."""
     return datetime.now(timezone.utc).replace(tzinfo=None)
 
 

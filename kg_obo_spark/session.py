@@ -8,9 +8,12 @@ Spark and DuckDB agree on timestamps.
 
 from __future__ import annotations
 
+import functools
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 
 def _sweep_dead_scratch(local_root: str) -> str:
@@ -158,6 +161,35 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: str | StructType
+) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` (tuples in ``schema`` order),
+    built from an Arrow table.
+
+    The one way the library turns a Python list into a frame. A local list
+    handed to ``createDataFrame`` becomes a pickled Python RDD
+    (``Scan ExistingRDD``), so every job that reads it runs Python tasks on
+    a worker pool of their own; an Arrow table plans as a JVM
+    ``LocalTableScan`` and runs none. Naive datetimes are read as UTC
+    instants (``pa.timestamp(tz="UTC")``), never in the host's local zone.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else _parse_ddl(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)
+
+
+# a DDL string parses in the JVM; the library's schemas are a fixed handful
+_parse_ddl = functools.cache(_parse_datatype_string)
 
 
 def stop_spark() -> None:

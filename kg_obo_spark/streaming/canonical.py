@@ -49,6 +49,7 @@ from kg_obo_spark.operators.canonicalize import (
     registry_bucket,
     registry_delta_update,
 )
+from kg_obo_spark.session import local_frame
 from kg_obo_spark.sources.tableio import Table
 
 ASSIGNMENT_SCHEMA = "id string, component string, _epoch long"
@@ -99,7 +100,7 @@ def read_assignment(
     ``broadcast_tail_rows`` (pathological compaction lag)."""
     table = _table(out_root)
     if not table.exists():
-        return spark.createDataFrame([], ASSIGNMENT_SCHEMA).select("id", "component")
+        return local_frame(spark, [], ASSIGNMENT_SCHEMA).select("id", "component")
     dirs = json.loads(table.latest().data_dir)
     base = spark.read.parquet(dirs[0]).select("id", "component", "_epoch")
     if len(dirs) == 1:

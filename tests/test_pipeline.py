@@ -63,6 +63,36 @@ def test_crash_resume_identical_output(spark, onto, transcripts, tmp_path):
     assert nodes_full == nodes_resumed
 
 
+def test_pipeline_builds_no_local_list_frame(
+    spark, onto, transcripts, tmp_path, monkeypatch
+):
+    """Every driver-side frame a run builds (lineage, tracking, pending units,
+    canonical map, dictionary rows) comes from Arrow, never from a local list
+    shipped through a Python RDD: with that path disabled a fresh run and a
+    crash-then-resume still give the uninterrupted triple set."""
+    from pyspark.sql import SparkSession
+
+    def no_local_list(*args, **kwargs):
+        raise AssertionError("createDataFrame(<local list>) reached")
+
+    def triples(res):
+        return {(r["subject"], r["predicate"], r["object"]) for r in res.edges.collect()}
+
+    want = triples(run_pipeline(spark, transcripts, onto, str(tmp_path / "ref"), n_buckets=2))
+    monkeypatch.setattr(SparkSession, "_createFromLocal", no_local_list)
+    fresh = run_pipeline(spark, transcripts, onto, str(tmp_path / "fresh"), n_buckets=2)
+    assert triples(fresh) == want
+    root = str(tmp_path / "crash")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_pipeline(
+            spark, transcripts, onto, root,
+            n_buckets=2, unit_batch_size=1, fail_after_batches=1,
+        )
+    resumed = run_pipeline(spark, transcripts, onto, root, n_buckets=2)
+    assert resumed.units_skipped == [0]
+    assert triples(resumed) == want
+
+
 def test_lock_blocks_concurrent_run(spark, onto, transcripts, tmp_path):
     root = str(tmp_path / "locked")
     lock = Lock(f"{root}/_lock")
@@ -93,11 +123,15 @@ def test_lineage_and_tracking_written(spark, onto, transcripts, tmp_path):
     assert not store.transformed_exists(spark, onto.name, "nope")
 
 
-def test_repair_ladder_degrades_poisoned_batch(spark, onto, tmp_path):
+def test_repair_ladder_degrades_poisoned_batch(spark, onto, tmp_path, caplog):
     """A turn that blows the per-turn candidate budget at level 0 (synonym
     boilerplate) completes at level 1 (synonyms dropped), with a lineage row
-    recording the degradation — the robot convert fallback-chain analog."""
+    recording the degradation — the robot convert fallback-chain analog.
+    The ladder step and the batch's edge path are logged at INFO."""
+    import logging
     from datetime import datetime
+
+    caplog.set_level(logging.INFO, logger="kg_obo_spark")
 
     syn = next(s for t in onto.terms for s in t["synonyms"])
     poisoned = spark.createDataFrame(
@@ -111,6 +145,13 @@ def test_repair_ladder_degrades_poisoned_batch(spark, onto, tmp_path):
         spark, tr, onto, str(tmp_path / "kg"),
         n_buckets=2, max_candidates_per_turn=10,
     )
+    assert [
+        r.getMessage() for r in caplog.records if r.name == "kg_obo_spark.pipeline"
+    ] == [
+        "repair ladder: units-0-1 candidate budget blown at level 0, "
+        "retrying at level 1",
+        f"edge path: units-0-1 n_in={tr.count()} -> strings",
+    ]
     store = TrackingStore(str(tmp_path / "kg"))
     lin = store.lineage.read(spark)
     deg = lin.filter(F.col("stage") == "extract_degraded").collect()

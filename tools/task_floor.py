@@ -3,6 +3,7 @@
 Usage, from the repository root:
 
     python3 tools/task_floor.py [--partitions 1,4,16,64] [--reps 3] [--cpus N]
+    python3 tools/task_floor.py --local-rows [--reps N] [--cpus N]
 
 For each partition count N it runs, ``--reps`` times after one warm-up:
 
@@ -16,6 +17,17 @@ It prints the median ``executorRunTime`` of each stage's tasks (from Spark's
 status store), the median stage wall time, and what the Arrow tasks saw in
 their worker: the zipimporters in ``sys.path_importer_cache``, the archives
 they cover, and whether ``kg_obo_spark.pyworker``'s guard was installed.
+
+``--local-rows`` runs another leg instead: a two-row, commit-shaped write
+(``LINEAGE_SCHEMA`` rows appended as parquet to a fresh directory) whose frame
+is built both ways, in alternating order, ``--reps`` times after one warm-up:
+
+- ``local list``: ``spark.createDataFrame(<list>)``, a pickled Python RDD whose
+  scan runs Python tasks;
+- ``arrow``: ``kg_obo_spark.session.local_frame``, a JVM ``LocalTableScan``.
+
+For each it prints the median ``executorRunTime`` of the write's tasks, the
+median wall time of the build plus write, and the tasks per write.
 """
 
 from __future__ import annotations
@@ -23,8 +35,10 @@ from __future__ import annotations
 import argparse
 import os
 import platform
+import shutil
 import statistics
 import sys
+import tempfile
 import time
 import uuid
 
@@ -85,11 +99,55 @@ def timed(sc, action) -> tuple[float, list[float], object]:
     return time.perf_counter() - t0, task_run_times(sc, group), result
 
 
+def local_rows_leg(spark, reps: int) -> None:
+    """Time a two-row lineage-shaped parquet append, its frame built from a
+    local list and from Arrow."""
+    from datetime import datetime, timezone
+
+    from kg_obo_spark.plans.tracking import LINEAGE_SCHEMA
+    from kg_obo_spark.session import local_frame
+
+    sc = spark.sparkContext
+    now = datetime.now(timezone.utc).replace(tzinfo=None)
+    rows = [("run", "unit_done", -1, 0, 0, 0, str(u), now) for u in range(2)]
+    builds = {
+        "local list": lambda: spark.createDataFrame(rows, LINEAGE_SCHEMA),
+        "arrow": lambda: local_frame(spark, rows, LINEAGE_SCHEMA),
+    }
+    got = {name: {"wall": [], "task": [], "tasks": []} for name in builds}
+    out = tempfile.mkdtemp(prefix="task_floor_")
+    try:
+        for rep in range(reps + 1):
+            order = list(builds) if rep % 2 else list(builds)[::-1]
+            for name in order:
+                path = os.path.join(out, uuid.uuid4().hex)
+                wall, tasks, _ = timed(
+                    sc, lambda: builds[name]().write.mode("append").parquet(path)
+                )
+                if rep:  # rep 0 starts the workers
+                    got[name]["wall"].append(wall)
+                    got[name]["task"] += tasks
+                    got[name]["tasks"].append(len(tasks))
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+    print(f"{'frame':>10}  {'task ms':>8}  {'write s':>8}  {'tasks':>5}")
+    for name, g in got.items():
+        print(
+            f"{name:>10}  {1000 * statistics.median(g['task']):>8.1f}  "
+            f"{statistics.median(g['wall']):>8.3f}  "
+            f"{statistics.median(g['tasks']):>5g}"
+        )
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--partitions", default="1,4,16,64")
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--cpus", type=int, default=len(os.sched_getaffinity(0)))
+    ap.add_argument(
+        "--local-rows", action="store_true",
+        help="time a two-row commit-shaped write built both ways instead",
+    )
     args = ap.parse_args()
 
     # workers import kg_obo_spark from this checkout
@@ -106,6 +164,12 @@ def main() -> None:
     sc = spark.sparkContext
     schema = "pid long, zipimporters long, archives long, guarded boolean"
     print(f"# {args.cpus} cpus, Python {platform.python_version()}, PySpark {pyspark.__version__}")
+    if args.local_rows:
+        try:
+            local_rows_leg(spark, args.reps)
+        finally:
+            spark.stop()
+        return
     print(
         f"{'tasks':>5}  {'arrow task ms':>13}  {'jvm task ms':>11}  "
         f"{'arrow stage s':>13}  {'jvm stage s':>11}  {'zipimporters':>12}  "
