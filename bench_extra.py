@@ -13,6 +13,13 @@ Modes:
                                               kg_comention_edges
   python bench_extra.py plans <outdir>      - .explain("formatted") of every
                                               headline query into <outdir>
+  python bench_extra.py run-pipeline [reps] - run_pipeline on perfbench's
+                                              generator (20k conversations,
+                                              seed 1, n_buckets=8, one unit
+                                              batch) at per_mille 0 and 1:
+                                              turns/s, triples/s, jobs per
+                                              unit batch, run_pipeline ÷
+                                              stripped dataflow
 
 Data dir from $SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0 — the
 driver's round-7 measurement scale), cores from $SPARK_GRAFT_CPUS.
@@ -25,7 +32,7 @@ import json
 import os
 import sys
 import time
-from contextlib import redirect_stdout
+from contextlib import nullcontext, redirect_stdout
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
@@ -248,6 +255,87 @@ def run_pipeline_stages(reps: int = 3) -> None:
     print(json.dumps({"pipeline_stages": res}))
 
 
+def run_pipeline_probe(reps: int = 3) -> None:
+    """``run_pipeline`` as a user runs it, on perfbench's corpus generator:
+    20k conversations, seed 1, ``n_buckets=8``, all pending units in one
+    batch, all-ASCII (``per_mille`` 0) and with an accented sentence in ~1
+    turn per 1000 (``per_mille`` 1). Per corpus, one traced warm-up call
+    counts the jobs (perfbench's tracer: a unit batch's jobs are those under
+    its ``co_edges`` commit and its ``mark_units_done``, plus a ``mentions``
+    commit on versions that still write one), then ``reps``
+    untraced calls and ``reps`` stripped-dataflow passes are timed; figures
+    are medians. Prints one JSON line per corpus."""
+    import shutil
+    import statistics
+    import tempfile
+
+    from kg_obo_spark.datagen.ontology import build_ontology
+    from kg_obo_spark.plans.pipeline import run_pipeline
+    from perfbench import corpus as pc
+    from perfbench.run import dataflow_s
+    from perfbench.tracer import Tracer, layer_metrics
+
+    BATCH_SPANS = (
+        "tableio.commit:co_edges", "tableio.commit:mentions", "tracking.mark_units_done",
+    )
+    spark = _spark()
+    onto = build_ontology(n_terms=pc.N_TERMS)
+    cdict = pc.canon_dict(spark, onto)
+    work = tempfile.mkdtemp(prefix="bench-extra-run-pipeline-")
+    tracer = Tracer(spark)
+    tracer.install()
+
+    def call(path: str, traced: bool = False) -> tuple[float, int]:
+        """One run into a fresh output root: (wall s, committed triples)."""
+        out = os.path.join(work, "out")
+        tracer.active = traced
+        try:
+            t = time.perf_counter()
+            with tracer.span("pipeline.run_pipeline") if traced else nullcontext():
+                res = run_pipeline(spark, spark.read.parquet(path), onto, out, n_buckets=8)
+            wall = time.perf_counter() - t
+            tracer.active = False
+            return wall, res.edges.count()
+        finally:
+            tracer.active = False
+            shutil.rmtree(out, ignore_errors=True)
+
+    try:
+        for per_mille in (0, 1):
+            _, path = pc.corpus(spark, work, onto, 20_000, 1, per_mille, twin=False)
+            turns = spark.read.parquet(path).count()
+            since = time.time()
+            triples = call(path, traced=True)[1]
+            jobs = tracer.jobs(since)
+            span_of = {s["id"]: s for s in tracer.spans}
+
+            def in_batch(job) -> bool:
+                s = span_of.get(job["span"])
+                while s is not None:
+                    if s["name"] in BATCH_SPANS:
+                        return True
+                    s = span_of.get(s["parent"])
+                return False
+
+            walls = [call(path)[0] for _ in range(reps)]
+            flows = [dataflow_s(spark, onto, cdict, path) for _ in range(reps)]
+            wall, flow = statistics.median(walls), statistics.median(flows)
+            print(json.dumps({
+                "per_mille": per_mille, "turns": turns, "triples": triples,
+                "run_pipeline_s": round(wall, 3), "dataflow_s": round(flow, 3),
+                "turns_per_s": round(turns / wall, 1),
+                "triples_per_s": round(triples / wall, 1),
+                "jobs": layer_metrics(tracer.spans, jobs)["pipeline.jobs"],
+                "jobs_per_unit_batch": sum(map(in_batch, jobs)),
+                "dataflow_ratio": round(wall / flow, 3),
+                "walls": [round(w, 3) for w in walls],
+                "flows": [round(f, 3) for f in flows],
+            }))
+    finally:
+        tracer.uninstall()
+        shutil.rmtree(work, ignore_errors=True)
+
+
 def run_rev_stages(reps: int = 3) -> None:
     """Isolate revenue_by_segment: lineitem scan, orders broadcast build via a
     join probe, the full query."""
@@ -328,6 +416,8 @@ if __name__ == "__main__":
         run_pipeline_stages()
     elif mode == "rev-stages":
         run_rev_stages()
+    elif mode == "run-pipeline":
+        run_pipeline_probe(int(sys.argv[2]) if len(sys.argv) > 2 else 3)
     elif mode == "plans":
         outdir = sys.argv[2] if len(sys.argv) > 2 else "plans/r08_scratch"
         names = sys.argv[3].split(",") if len(sys.argv) > 3 else None

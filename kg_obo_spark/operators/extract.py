@@ -167,6 +167,7 @@ def extract_turn_terms(
     onto: Ontology,
     canon: dict[str, str] | None = None,
     degradation_level: int = 0,
+    max_candidates_per_turn: int | None = None,
 ) -> DataFrame:
     """Fused scan: (conv_id, turn_idx, terms array<string>) — per-turn sorted
     distinct CANONICAL term ids computed inside the extraction task.
@@ -177,9 +178,15 @@ def extract_turn_terms(
     (materialize.per_turn_terms). The canonical map is applied as a plain
     broadcast dict (it IS the small dimension — same object the union-find
     fast path of canonical_map produces). Turns with no mentions emit no row,
-    matching groupBy semantics. Use when downstream only needs per-turn term
-    sets (co-mention edges, node ids); the offset-level mentions path
-    (extract_mentions) remains for lineage/resume artifacts.
+    matching groupBy semantics. This is the scan of the pipeline's per-batch
+    body (materialize.co_mention_batch), which both ``run_pipeline`` and the
+    streaming sink run; the offset-level mentions path (extract_mentions)
+    serves the registry queries that need spans, and no pipeline commit.
+
+    ``degradation_level`` and ``max_candidates_per_turn`` are
+    :func:`extract_mentions`' repair-ladder knobs: a row whose best-only
+    match count exceeds the budget raises :class:`ExtractionError`, on the
+    fast path and on the regex path alike.
 
     Arrow-native stage (``mapInArrow``): texts come out of the RecordBatch via
     ``to_pylist`` (C) and key columns go back via Arrow ``take`` — no pandas
@@ -205,6 +212,21 @@ def extract_turn_terms(
             cols = matcher.find_batch_columnar(
                 texts, best_only=True, need_surface=False, as_ranks=True
             )
+            bf = None if cols is not None else matcher.find_batch(texts, best_only=True)
+            if max_candidates_per_turn is not None and texts:
+                n_found = (
+                    np.bincount(cols[0], minlength=len(texts))
+                    if cols is not None
+                    else np.fromiter(map(len, bf), dtype=np.int64, count=len(bf))
+                )
+                worst = int(n_found.argmax())
+                if n_found[worst] > max_candidates_per_turn:
+                    raise ExtractionError(
+                        str(rb.column(schema.get_field_index("conv_id"))[worst].as_py()),
+                        rb.column(schema.get_field_index("turn_idx"))[worst].as_py(),
+                        int(n_found[worst]),
+                        max_candidates_per_turn,
+                    )
             if cols is not None:
                 # fully vectorized per-turn reduce: the canon map is applied
                 # ONCE to the matcher's term-id table (cached rank->canon-rank
@@ -236,7 +258,6 @@ def extract_turn_terms(
                     names=["conv_id", "turn_idx", "terms"],
                 )
                 continue
-            bf = matcher.find_batch(texts, best_only=True)
             keep_idx: list[int] = []
             terms_col: list[list[str]] = []
             for i, found in enumerate(bf):

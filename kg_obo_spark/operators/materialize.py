@@ -36,6 +36,8 @@ CO_MENTION_PREDICATE = "biolink:related_to"
 CO_MENTION_RELATION = "co_mentioned_with"
 ISA_PREDICATE = "biolink:subclass_of"
 ISA_RELATION = "rdfs:subClassOf"
+# rows of co_mention_batch: b NULL = "a was mentioned", else the pair a < b
+REGISTRY_SCHEMA = "a string, b string"
 
 
 def rewrite_category(df: DataFrame, col: str = "category") -> DataFrame:
@@ -156,6 +158,68 @@ def co_mention_weights(mentions: DataFrame) -> DataFrame:
     )
 
 
+def co_mention_batch(
+    transcripts: DataFrame,
+    onto: Ontology,
+    canon: dict[str, str] | None = None,
+    degradation_level: int = 0,
+    max_candidates_per_turn: int | None = None,
+) -> DataFrame:
+    """The per-batch body of the KG build: one batch of turns -> its
+    co-mention registry rows ``(a string, b string)``, distinct.
+
+    A row with ``b`` NULL records "``a`` was mentioned in this batch"; every
+    other row is a co-mention pair with ``a < b``. Both kinds come from one
+    generator over each turn's sorted term array: ``posexplode`` gives
+    (i, a), and ``explode(concat([NULL], terms[i+1:]))`` gives a's NULL row
+    plus every later term. So the batch costs one fused scan
+    (:func:`~kg_obo_spark.operators.extract.extract_turn_terms`: extract +
+    canonical rewrite + per-turn reduce), one two-column distinct shuffle
+    and whatever writes the result; nothing is cached or read back.
+    ``run_pipeline`` commits it per unit batch and the streaming sink per
+    micro-batch, each under its own tag; :func:`kg_from_registry` turns the
+    accumulated rows into the KG.
+
+    ``degradation_level`` and ``max_candidates_per_turn`` are the repair
+    ladder's knobs (see ``extract_turn_terms``)."""
+    from kg_obo_spark.operators.extract import extract_turn_terms
+    from kg_obo_spark.partitioning import ensure_scan_parallelism
+
+    pt = extract_turn_terms(
+        ensure_scan_parallelism(transcripts.select("conv_id", "turn_idx", "text")),
+        onto,
+        canon,
+        degradation_level=degradation_level,
+        max_candidates_per_turn=max_candidates_per_turn,
+    )
+    first = pt.select("terms", F.posexplode("terms").alias("_i", "a"))
+    later = F.slice(F.col("terms"), F.col("_i") + 2, F.size("terms"))
+    return first.select(
+        "a",
+        F.explode(F.concat(F.array(F.lit(None).cast("string")), later)).alias("b"),
+    ).distinct()
+
+
+def kg_from_registry(registry: DataFrame, onto: Ontology) -> tuple[DataFrame, DataFrame]:
+    """(nodes, edges) of the KG from accumulated :func:`co_mention_batch`
+    rows: nodes for the distinct mentioned ids (``b`` NULL), edges = the
+    co-mention pairs plus the is_a edges between mentioned ids, under one
+    distinct (a pair recurs across batches). The registry is bounded by the
+    dictionary (ids and their co-mention pairs), not by the corpus, and is
+    read once here."""
+    mentioned = registry.filter(F.col("b").isNull()).select(F.col("a").alias("id"))
+    co = registry.filter(F.col("b").isNotNull()).select(
+        F.col("a").alias("subject"),
+        F.lit(CO_MENTION_PREDICATE).alias("predicate"),
+        F.col("b").alias("object"),
+        F.lit(CO_MENTION_RELATION).alias("relation"),
+        F.lit(onto.knowledge_source).alias("knowledge_source"),
+    )
+    nodes = build_nodes(mentioned.withColumnRenamed("id", "term_id"), onto)
+    edges = co.unionByName(isa_from_mentioned(mentioned.distinct(), onto)).distinct()
+    return nodes, edges
+
+
 def build_edges(
     mentions: DataFrame, onto: Ontology, include_isa: bool = True
 ) -> DataFrame:
@@ -257,12 +321,13 @@ def edges_from_per_turn_ranks(
 def co_edges_from_mention_ranks(
     mentions: DataFrame, cu, onto: Ontology
 ) -> DataFrame:
-    """Vocab-int co-mention edges from COMMITTED canonical mention rows
-    (ROADMAP #13): the pipeline's per-unit edge stage above the crossover.
+    """Vocab-int co-mention edges from canonical mention rows (ROADMAP #13).
+    No library code calls it since ``run_pipeline`` commits per-batch
+    registry rows (:func:`co_mention_batch`) instead of mentions; it stays
+    with the rest of the rank family and its equality test.
 
-    The committed mention artifacts keep string CURIEs — they are the
-    lineage / resume / downstream-read surface — so this path re-ranks them
-    on the way into the pair shuffle: a broadcast join against the tiny
+    Mention rows carry string CURIEs, so this path re-ranks them on the way
+    into the pair shuffle: a broadcast join against the tiny
     (canonical id, rank) table (bounded by dictionary size), then the
     (conv, turn) reduce and pair-expansion distinct both shuffle int32s
     instead of CURIE strings. ``cu`` must cover every canonical term_id in

@@ -1,40 +1,36 @@
 """Streaming variant of the flagship KG-construction dataflow.
 
 The batch pipeline (plans/pipeline.py) splits work into conv-local increments
-(mentions, co-mention edges — committed per unit batch) plus one global
-finalize (is_a edges over ALL mentioned terms). This module is the same split
-under Structured Streaming:
+(one registry commit per unit batch) plus one global finalize (nodes and
+is_a edges over ALL mentioned terms). This module is the same split under
+Structured Streaming, with the same two functions:
 
-- per micro-batch: the FUSED Arrow scan (extract + canonical rewrite +
-  per-turn reduce, operators/extract.extract_turn_terms) -> co-mention pair
-  expansion -> one append commit of the batch's distinct pairs, plus an append
-  commit of the batch's mentioned-term ids. Both commits carry the epoch tag,
-  so a replayed micro-batch is a no-op (exactly-once, like ingest.py).
-- at read time (:func:`read_kg_edges`): co edges = distinct over the appended
-  pair commits; is_a edges come from the ACCUMULATED mentioned-id registry —
-  crucially NOT per batch: an is_a edge whose endpoints were first mentioned
-  in different micro-batches exists in the final graph (pinned by test
-  against the batch `build_edges` on the full corpus).
+- per micro-batch: :func:`~kg_obo_spark.operators.materialize.co_mention_batch`
+  (fused Arrow scan -> mentioned ids + co-mention pairs, one distinct) and
+  one append commit of its rows to ``co_edges``, tagged with the epoch, so a
+  replayed micro-batch is a no-op (exactly-once, like ingest.py).
+- at read time (:func:`read_kg_edges`):
+  :func:`~kg_obo_spark.operators.materialize.kg_from_registry` over the
+  accumulated rows — co edges = distinct over the appended pairs; is_a edges
+  come from the ACCUMULATED mentioned ids, crucially NOT per batch: an is_a
+  edge whose endpoints were first mentioned in different micro-batches exists
+  in the final graph (pinned by test against the batch `build_edges` on the
+  full corpus).
 
 Work per trigger is bounded by the micro-batch (the scan is map-only; the
-pair distinct is batch-local); the only accumulated state is the mentioned-id
-registry, a dictionary-bounded dimension.
+distinct is batch-local); the only accumulated state is the registry, bounded
+by the dictionary. Unlike ``run_pipeline``, whose pending-unit lookup over
+lineage runs Spark jobs, the stream has no lookup of its own: its checkpoint
+names the next epoch, and a replayed epoch's tag check is a file stat.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from kg_obo_spark.datagen.ontology import Ontology
-from kg_obo_spark.operators.extract import extract_turn_terms
-from kg_obo_spark.operators.materialize import (
-    CO_MENTION_PREDICATE,
-    CO_MENTION_RELATION,
-    isa_from_mentioned,
-    pairs_from_per_turn,
-)
+from kg_obo_spark.operators.materialize import co_mention_batch, kg_from_registry
 from kg_obo_spark.sources.tableio import Table
 
 
@@ -45,24 +41,16 @@ def start_kg_pipeline_stream(
     checkpoint_dir: str,
     canon: dict[str, str] | None = None,
 ) -> StreamingQuery:
-    """Run the fused extraction dataflow continuously; commits per micro-batch
-    are idempotent on epoch id."""
-    pairs_t = Table(f"{out_root}/stream_co_pairs")
-    mentioned_t = Table(f"{out_root}/stream_mentioned")
+    """Run the per-batch body continuously; each micro-batch is one commit,
+    idempotent on its epoch id."""
+    co_edges_t = Table(f"{out_root}/co_edges")
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        tag = f"epoch-{epoch_id}"
-        # the guard checks the LAST-committed table: if the pairs commit
-        # landed, the mentioned commit (done first) must have landed too, so
-        # a crash between the two replays cleanly (mentioned's own
-        # if_absent_tag dedups its already-landed half)
-        if pairs_t.has_tag(tag):
-            return
-        pt = extract_turn_terms(batch_df, onto, canon).localCheckpoint()
-        pairs = pairs_from_per_turn(pt).select("a", "b").distinct()
-        mentioned = pt.select(F.explode("terms").alias("id")).distinct()
-        mentioned_t.commit(mentioned, mode="append", if_absent_tag=tag)
-        pairs_t.commit(pairs, mode="append", if_absent_tag=tag)
+        co_edges_t.commit(
+            co_mention_batch(batch_df, onto, canon),
+            mode="append",
+            if_absent_tag=f"epoch-{epoch_id}",
+        )
 
     return (
         transcripts_stream.writeStream.foreachBatch(sink)
@@ -74,15 +62,6 @@ def start_kg_pipeline_stream(
 
 def read_kg_edges(spark: SparkSession, out_root: str, onto: Ontology) -> DataFrame:
     """The full KGX edge table from the streaming commits: distinct co-mention
-    edges + is_a edges over the ACCUMULATED mentioned-id registry. Equals the
-    batch `build_edges` over all streamed turns (pinned by test)."""
-    pairs = Table(f"{out_root}/stream_co_pairs").read(spark).distinct()
-    mentioned = Table(f"{out_root}/stream_mentioned").read(spark).distinct()
-    co = pairs.select(
-        F.col("a").alias("subject"),
-        F.lit(CO_MENTION_PREDICATE).alias("predicate"),
-        F.col("b").alias("object"),
-        F.lit(CO_MENTION_RELATION).alias("relation"),
-        F.lit(onto.knowledge_source).alias("knowledge_source"),
-    )
-    return co.unionByName(isa_from_mentioned(mentioned, onto)).distinct()
+    edges + is_a edges over the ACCUMULATED mentioned ids. Equals the batch
+    `build_edges` over all streamed turns (pinned by test)."""
+    return kg_from_registry(Table(f"{out_root}/co_edges").read(spark), onto)[1]

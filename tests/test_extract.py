@@ -169,3 +169,25 @@ def test_extract_turn_terms_equals_shuffled_path(spark, onto):
         for r in extract_turn_terms(tr, onto, cdict).collect()
     }
     assert fused == shuffled and fused
+
+
+def test_extract_turn_terms_candidate_budget_on_both_paths(spark, onto):
+    """The fused scan enforces extract_mentions' per-turn candidate budget:
+    the same count of best-only matches trips it on the fast path (ASCII)
+    and on the regex path (a non-ASCII row sends its batch there), and the
+    error names the turn."""
+    import pytest
+
+    from kg_obo_spark.operators.extract import extract_turn_terms
+
+    tid = onto.terms[0]["id"]
+    schema = "conv_id string, turn_idx int, text string"
+    for tail in ("", " déjà vu"):
+        text = (tid + " ") * 12 + tail
+        df = spark.createDataFrame([("c-ok", 0, "plain turn"), ("c-hot", 3, text)], schema)
+        n = extract_mentions(df, onto).filter(F.col("conv_id") == "c-hot").count()
+        assert n == 12
+        # at the budget the scan passes, one below it fails on the hot turn
+        assert extract_turn_terms(df, onto, max_candidates_per_turn=n).count() == 1
+        with pytest.raises(Exception, match=r"turn \(c-hot,3\) produced 12"):
+            extract_turn_terms(df, onto, max_candidates_per_turn=n - 1).collect()

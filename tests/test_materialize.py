@@ -114,3 +114,43 @@ def test_co_mention_weights_exact_lift(spark):
     plan = plan.split("== Initial Plan ==")[0]
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_co_mention_batch_rows_and_registry_kg(spark, onto):
+    """One batch's registry rows are its distinct mentioned ids (b NULL) and
+    its distinct a < b pairs; the KG built from two batches' rows equals the
+    batch build over the whole input, including an is_a edge whose endpoints
+    were mentioned in different batches."""
+    from kg_obo_spark.operators.extract import extract_mentions, extract_turn_terms
+    from kg_obo_spark.operators.materialize import co_mention_batch, kg_from_registry
+
+    by_id = {t["id"]: t for t in onto.terms}
+    child, parent = onto.is_a[0]
+    schema = "conv_id string, turn_idx int, text string"
+    b1 = spark.createDataFrame(
+        [("c0", 0, f"{by_id[child]['name']} with BFO:0000001"),
+         ("c0", 1, f"again {by_id[child]['name']} and BFO:0000001"),
+         ("c1", 0, "no terms in here")],
+        schema,
+    )
+    b2 = spark.createDataFrame([("c2", 0, f"the {by_id[parent]['name']}")], schema)
+
+    rows = co_mention_batch(b1, onto).collect()
+    terms = [r["terms"] for r in extract_turn_terms(b1, onto).collect()]
+    assert len(rows) == len(set(rows))
+    assert {r["a"] for r in rows if r["b"] is None} == {t for ts in terms for t in ts}
+    assert {(r["a"], r["b"]) for r in rows if r["b"] is not None} == {
+        (a, b) for ts in terms for i, a in enumerate(ts) for b in ts[i + 1 :]
+    }
+
+    registry = co_mention_batch(b1, onto).unionByName(co_mention_batch(b2, onto))
+    nodes, edges = kg_from_registry(registry, onto)
+    whole = b1.unionByName(b2)
+    want = build_edges(extract_mentions(whole, onto), onto)
+    assert sorted(edges.collect()) == sorted(want.collect())
+    assert (child, "biolink:subclass_of", parent) in {
+        (r["subject"], r["predicate"], r["object"]) for r in edges.collect()
+    }
+    assert {r["id"] for r in nodes.collect()} == {
+        r["term_id"] for r in extract_mentions(whole, onto).collect()
+    }

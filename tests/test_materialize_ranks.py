@@ -4,8 +4,6 @@ identical edge set as extract_turn_terms -> edges_from_per_turn on the same
 corpus (rank order == lexicographic string order makes a < b semantics
 line up)."""
 
-import json
-
 from kg_obo_spark.datagen import build_ontology, generate_transcripts
 from kg_obo_spark.dictionary import get_matcher
 from kg_obo_spark.operators.canonicalize import canonical_map
@@ -78,26 +76,6 @@ def test_mention_rank_edges_equal_string_edges(spark):
     got = {tuple(r) for r in ranked.collect()}
     assert got == want and len(got) > 50
     assert "element_at" in ranked._jdf.queryExecution().optimizedPlan().toString()
-
-
-def test_pipeline_int_rank_edges_equal(spark, tmp_path):
-    """run_pipeline(int_rank_edges=True) commits the identical final edge and
-    node sets as the default string path — the ROADMAP #13 opt-in is a pure
-    representation change; lineage/resume artifacts stay string CURIEs."""
-    from kg_obo_spark.plans.pipeline import run_pipeline
-
-    onto = build_ontology()
-    tr = generate_transcripts(spark, n_convs=40, seed=3, ontology=onto).cache()
-    a = run_pipeline(spark, tr, onto, str(tmp_path / "kg_str"),
-                     int_rank_edges=False)
-    b = run_pipeline(spark, tr, onto, str(tmp_path / "kg_int"),
-                     int_rank_edges=True)
-    assert {tuple(r) for r in a.edges.collect()} == \
-           {tuple(r) for r in b.edges.collect()}
-    # node rows carry a map column (unhashable) — compare via sorted JSON
-    key = lambda rows: sorted(json.dumps(r.asDict(True), sort_keys=True)
-                              for r in rows)
-    assert key(a.nodes.collect()) == key(b.nodes.collect())
 
 
 def test_edges_from_transcripts_autoswitch(spark):

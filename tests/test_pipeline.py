@@ -127,9 +127,12 @@ def test_repair_ladder_degrades_poisoned_batch(spark, onto, tmp_path, caplog):
     """A turn that blows the per-turn candidate budget at level 0 (synonym
     boilerplate) completes at level 1 (synonyms dropped), with a lineage row
     recording the degradation — the robot convert fallback-chain analog.
-    The ladder step and the batch's edge path are logged at INFO."""
+    The ladder step and the committed batch are logged at INFO."""
     import logging
     from datetime import datetime
+
+    from kg_obo_spark.operators.canonicalize import union_find
+    from kg_obo_spark.operators.extract import extract_turn_terms
 
     caplog.set_level(logging.INFO, logger="kg_obo_spark")
 
@@ -145,26 +148,28 @@ def test_repair_ladder_degrades_poisoned_batch(spark, onto, tmp_path, caplog):
         spark, tr, onto, str(tmp_path / "kg"),
         n_buckets=2, max_candidates_per_turn=10,
     )
+    # the committed KG is the level-1 scan of the same input
+    canon = {k: v for k, v in union_find(list(onto.xrefs)).items() if k != v}
+    level1 = [
+        r["terms"] for r in extract_turn_terms(tr, onto, canon, degradation_level=1).collect()
+    ]
+    ids = {t for terms in level1 for t in terms}
+    pairs = {(a, b) for terms in level1 for i, a in enumerate(terms) for b in terms[i + 1 :]}
+    assert {r["id"] for r in res.nodes.collect()} == ids
     assert [
         r.getMessage() for r in caplog.records if r.name == "kg_obo_spark.pipeline"
     ] == [
         "repair ladder: units-0-1 candidate budget blown at level 0, "
         "retrying at level 1",
-        f"edge path: units-0-1 n_in={tr.count()} -> strings",
+        f"batch: units-0-1 n_in={tr.count()} diverted=0 ids={len(ids)} "
+        f"pairs={len(pairs)} level=1",
     ]
     store = TrackingStore(str(tmp_path / "kg"))
     lin = store.lineage.read(spark)
     deg = lin.filter(F.col("stage") == "extract_degraded").collect()
     assert deg and max(r["remap_count"] for r in deg) == 1
     # the degraded batch still extracted: primary labels + CURIEs survive
-    assert res.mentions.count() > 0
-    # the poisoned conversation itself produced no synonym-surface mentions
-    assert (
-        res.mentions.filter(
-            (F.col("conv_id") == "conv-poison") & (F.col("surface") == syn)
-        ).count()
-        == 0
-    )
+    assert ids
 
 
 def test_repair_ladder_exhausted_reraises(spark, onto, tmp_path):
@@ -219,20 +224,20 @@ def test_ladder_trigger_survives_message_reframing(spark, onto, tmp_path):
 
 
 def test_crash_before_unit_marker_does_not_duplicate_mentions(spark, onto, tmp_path):
-    """Crash in the window AFTER the mentions/edges commits but BEFORE the
+    """Crash in the window AFTER the batch's registry commit but BEFORE the
     unit-done marker: the resumed run re-enters the batch, and the unit tag
-    turns the duplicate commit into a lookup — the mentions table holds each
-    mention exactly once and triples match an uninterrupted run."""
+    turns the duplicate commit into a lookup — the per-batch table holds each
+    batch's mentioned ids and pairs exactly once and triples match an
+    uninterrupted run."""
     from kg_obo_spark.datagen import generate_transcripts
     from kg_obo_spark.plans.tracking import TrackingStore
-    from kg_obo_spark.sources.tableio import Table
 
     tr = generate_transcripts(spark, n_convs=60, seed=11, ontology=onto).cache()
     clean = run_pipeline(spark, tr, onto, str(tmp_path / "clean"), n_buckets=2,
                          unit_batch_size=1)
     clean_triples = {(r["subject"], r["predicate"], r["object"])
                      for r in clean.edges.collect()}
-    clean_mentions = clean.mentions.count()
+    clean_rows = _registry_rows(spark, tmp_path / "clean")
 
     orig = TrackingStore.mark_units_done
     calls = {"n": 0}
@@ -254,8 +259,8 @@ def test_crash_before_unit_marker_does_not_duplicate_mentions(spark, onto, tmp_p
         TrackingStore.mark_units_done = orig
     got = {(r["subject"], r["predicate"], r["object"]) for r in res.edges.collect()}
     assert got == clean_triples
-    # the crashed batch's mentions were committed once, not twice
-    assert Table(str(tmp_path / "kg" / "mentions")).read(spark).count() == clean_mentions
+    # the crashed batch's registry rows were committed once, not twice
+    assert _registry_rows(spark, tmp_path / "kg") == clean_rows
     # ... and so was its lineage: one summary row per stage and unit batch,
     # counting the same inputs as the uninterrupted run
     clean_rows = _batch_summaries(spark, tmp_path / "clean")
@@ -265,15 +270,22 @@ def test_crash_before_unit_marker_does_not_duplicate_mentions(spark, onto, tmp_p
     assert rows == clean_rows
 
 
+def _registry_rows(spark, root):
+    """Row count of the per-batch registry table (``co_edges``) of a root."""
+    from kg_obo_spark.sources.tableio import Table
+
+    return Table(str(root / "co_edges")).read(spark).count()
+
+
 def _batch_summaries(spark, root):
     """{(stage, units of the batch): [rows_in of each summary row]} over the
     per-batch lineage stages of a pipeline output root."""
     from kg_obo_spark.sources.tableio import Table
 
-    units = {}
-    for name in ("mentions", "co_edges"):
-        for s in Table(str(root / name)).snapshots():
-            units[s.snapshot_id] = tuple(s.meta["units"])
+    units = {
+        s.snapshot_id: tuple(s.meta["units"])
+        for s in Table(str(root / "co_edges")).snapshots()
+    }
     out = {}
     lin = TrackingStore(str(root)).lineage.read(spark)
     for r in lin.filter(F.col("partition_id") == -1).collect():
@@ -297,10 +309,11 @@ def test_resume_with_different_batch_size_does_not_duplicate(spark, onto, tmp_pa
     from kg_obo_spark.sources.tableio import Table
 
     tr = generate_transcripts(spark, n_convs=60, seed=13, ontology=onto).cache()
-    clean = run_pipeline(spark, tr, onto, str(tmp_path / "clean"), n_buckets=4)
+    clean = run_pipeline(spark, tr, onto, str(tmp_path / "clean"), n_buckets=4,
+                         unit_batch_size=2)
     clean_triples = {(r["subject"], r["predicate"], r["object"])
                      for r in clean.edges.collect()}
-    clean_mentions = clean.mentions.count()
+    clean_rows = _registry_rows(spark, tmp_path / "clean")
 
     orig = TrackingStore.mark_units_done
     calls = {"n": 0}
@@ -337,7 +350,7 @@ def test_resume_with_different_batch_size_does_not_duplicate(spark, onto, tmp_pa
         TrackingStore.mark_units_done = orig
     got = {(r["subject"], r["predicate"], r["object"]) for r in res.edges.collect()}
     assert got == clean_triples
-    assert Table(str(tmp_path / "kg" / "mentions")).read(spark).count() == clean_mentions
+    assert _registry_rows(spark, tmp_path / "kg") == clean_rows
 
 
 def test_stray_run_config_temp_file_does_not_break_resume(
@@ -378,27 +391,115 @@ def test_stray_run_config_temp_file_does_not_break_resume(
     with pytest.raises(RuntimeError, match="injected failure"):
         run_pipeline(spark, tr, onto, root, n_buckets=2, unit_batch_size=1,
                      fail_after_batches=1)
-    assert read_cfg() == {"unit_batch_size": 1}
+    recorded = {"unit_batch_size": 1, "n_buckets": 2, "layout": pipeline.BATCH_LAYOUT}
+    assert read_cfg() == recorded
     with open(cfg + ".tmp", "w") as f:
         f.write('{"unit_batch')  # a stray temp file from a cut-short write
     res = run_pipeline(spark, tr, onto, root, n_buckets=2)
     assert res.units_skipped and len(res.units_processed) == 1
-    assert read_cfg() == {"unit_batch_size": 1}
+    assert read_cfg() == recorded
     assert edges(res) == edges(clean)
 
 
 def test_fresh_single_batch_run_job_budget(spark, onto, transcripts, tmp_path):
-    """Bookkeeping launches no Spark job of its own: input counts are
-    observed on the mentions commit, partition rows come from its footers,
-    reads carry the committed schema, and one lineage commit covers the
-    batch. The budget is the measured job count of this call (15 at
-    local[4]); before those cuts it was 34."""
+    """Bookkeeping launches no Spark job of its own: input, id and pair
+    counts are observed on the batch's one commit, partition rows come from
+    its footers, reads carry the committed schema, and one lineage commit
+    covers the batch. The budget is the measured job count of this call (12
+    at local[4])."""
     from tests.conftest import count_jobs
 
     transcripts.count()  # materialize the cached input outside the count
     with count_jobs(spark) as jobs:
         run_pipeline(spark, transcripts, onto, str(tmp_path / "kg"), n_buckets=2)
-    assert jobs["n"] <= 15, jobs
+    assert jobs["n"] <= 12, jobs
+
+
+def test_unit_batch_job_budget(spark, onto, transcripts, tmp_path):
+    """A crash_resume-shaped run (2 units, one per batch): the first call
+    runs exactly one unit batch on a fresh root and stops, so its jobs are
+    that batch's — at most 3: the scan's shuffle-map, the registry write and
+    the lineage commit."""
+    from tests.conftest import count_jobs
+
+    transcripts.count()
+    with count_jobs(spark) as jobs:
+        with pytest.raises(RuntimeError, match="injected failure"):
+            run_pipeline(
+                spark, transcripts, onto, str(tmp_path / "kg"),
+                n_buckets=2, unit_batch_size=1, fail_after_batches=1,
+            )
+    assert jobs["n"] <= 3, jobs
+
+
+def test_resume_with_different_bucket_count_keeps_every_triple(
+    spark, onto, transcripts, tmp_path, caplog
+):
+    """Unit ids are hash buckets, so a resume that asks for another
+    n_buckets must reuse the recorded one: otherwise the skip-if-done lookup
+    marks the wrong rows done and their triples are silently dropped. The
+    override is logged at INFO."""
+    import logging
+
+    def triples(res):
+        return {(r["subject"], r["predicate"], r["object"]) for r in res.edges.collect()}
+
+    want = triples(run_pipeline(spark, transcripts, onto, str(tmp_path / "clean"), n_buckets=4))
+    root = str(tmp_path / "kg")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_pipeline(
+            spark, transcripts, onto, root,
+            n_buckets=4, unit_batch_size=1, fail_after_batches=1,
+        )
+    caplog.set_level(logging.INFO, logger="kg_obo_spark.pipeline")
+    res = run_pipeline(spark, transcripts, onto, root, n_buckets=2, unit_batch_size=1)
+    assert res.units_skipped == [0] and res.units_processed == [1, 2, 3]
+    assert triples(res) == want
+    assert f"run config: {root} records n_buckets=4, used instead of 2" in [
+        r.getMessage() for r in caplog.records
+    ]
+
+
+def test_resume_of_root_in_older_layout_raises(spark, onto, transcripts, tmp_path):
+    """A root whose run config records no per-batch layout was written with
+    a mentions table and a 5-column co_edges: resuming it must fail loudly,
+    naming the root, not mix two schemas in one table."""
+    import json
+    import os
+
+    from kg_obo_spark.sources.tableio import Table
+
+    root = str(tmp_path / "old")
+    os.makedirs(os.path.join(root, "mentions"))
+    with open(os.path.join(root, "_run_config.json"), "w") as f:
+        json.dump({"unit_batch_size": 1}, f)
+    with pytest.raises(ValueError, match=f"{root}: written in another per-batch layout"):
+        run_pipeline(spark, transcripts, onto, root, n_buckets=2, unit_batch_size=1)
+    assert not Lock(os.path.join(root, "_lock")).held()
+    assert not Table(os.path.join(root, "co_edges")).exists()
+
+
+def test_batch_without_mentions_commits_an_empty_kg(spark, onto, tmp_path):
+    """A batch that mentions no term has an empty registry: the observed id
+    and pair counts then report nothing (adaptive execution drops the
+    observed plan after the empty shuffle), so the batch counts with jobs
+    and its lineage still records its rows and its diverted null turn."""
+    from datetime import datetime
+
+    rows = [(f"c{i}", 0, "user", "nothing to see", "", datetime(2026, 1, 1)) for i in range(5)]
+    rows.append(("cx", 1, "user", None, "", datetime(2026, 1, 1)))
+    tr = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    )
+    res = run_pipeline(spark, tr, onto, str(tmp_path / "kg"), n_buckets=2)
+    assert res.nodes.count() == 0 and res.edges.count() == 0
+    lin = TrackingStore(str(tmp_path / "kg")).lineage.read(spark)
+    summary = {
+        r["stage"]: (r["rows_in"], r["rows_out"])
+        for r in lin.filter(F.col("partition_id") == -1).collect()
+    }
+    assert summary["input_errors"] == (6, 1)
+    assert summary["extract+link"] == (6, 0) and summary["co_edges"] == (0, 0)
 
 
 def test_observed_counts_time_out_instead_of_hanging(spark):

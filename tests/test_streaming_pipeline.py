@@ -54,10 +54,10 @@ def test_streaming_pipeline_equals_batch(spark, tmp_path):
     assert (child, "biolink:subclass_of", parent) in got
 
 
-def test_streaming_pipeline_crash_between_commits_replays_cleanly(spark, tmp_path):
-    """Crash AFTER the mentioned commit but BEFORE the pairs commit: the
-    replayed epoch must land the pairs without duplicating the mentioned rows
-    (guard is on the last-committed table; each commit is epoch-tagged)."""
+def test_streaming_pipeline_crash_after_commit_replays_cleanly(spark, tmp_path):
+    """Crash AFTER the micro-batch's one commit, before the stream records
+    the epoch: the replayed epoch finds its tag and commits nothing, so the
+    table keeps one snapshot and the edges equal the batch edges."""
     from kg_obo_spark.sources.tableio import Table
     from kg_obo_spark.streaming import pipeline as sp
 
@@ -68,13 +68,11 @@ def test_streaming_pipeline_crash_between_commits_replays_cleanly(spark, tmp_pat
     src = str(tmp_path / "src")
     spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(src)
 
-    # first run: crash the sink after the mentioned commit
+    # first run: crash the sink right after its commit landed
     orig_commit = Table.commit
     def exploding_commit(self, *a, **k):
-        snap = orig_commit(self, *a, **k)
-        if "stream_mentioned" in self.root:
-            raise RuntimeError("injected crash after mentioned commit")
-        return snap
+        orig_commit(self, *a, **k)
+        raise RuntimeError("injected crash after commit")
     Table.commit = exploding_commit
     try:
         stream = (spark.readStream.format("parquet").schema(SCHEMA)
@@ -87,8 +85,8 @@ def test_streaming_pipeline_crash_between_commits_replays_cleanly(spark, tmp_pat
         q.stop()
     finally:
         Table.commit = orig_commit
-    assert Table(str(tmp_path / "o" / "stream_mentioned")).exists()
-    assert not Table(str(tmp_path / "o" / "stream_co_pairs")).exists()
+    table = Table(str(tmp_path / "o" / "co_edges"))
+    assert len(table.snapshots()) == 1
 
     # replay (fresh checkpoint simulates source replay of the same epoch)
     stream = (spark.readStream.format("parquet").schema(SCHEMA)
@@ -102,6 +100,5 @@ def test_streaming_pipeline_crash_between_commits_replays_cleanly(spark, tmp_pat
     want = {(r["subject"], r["predicate"], r["object"])
             for r in build_edges(extract_mentions(full, onto), onto).collect()}
     assert got == want
-    # mentioned rows were NOT duplicated by the replay
-    m = Table(str(tmp_path / "o" / "stream_mentioned"))
-    assert len(m.snapshots()) == 1
+    # the replay committed nothing: still the one snapshot
+    assert len(table.snapshots()) == 1
