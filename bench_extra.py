@@ -261,8 +261,7 @@ def run_pipeline_probe(reps: int = 3) -> None:
     batch, all-ASCII (``per_mille`` 0) and with an accented sentence in ~1
     turn per 1000 (``per_mille`` 1). Per corpus, one traced warm-up call
     counts the jobs (perfbench's tracer: a unit batch's jobs are those under
-    its ``co_edges`` commit and its ``mark_units_done``, plus a ``mentions``
-    commit on versions that still write one), then ``reps``
+    its ``co_edges`` commit and its ``mark_units_done``), then ``reps``
     untraced calls and ``reps`` stripped-dataflow passes are timed; figures
     are medians. Prints one JSON line per corpus."""
     import shutil
@@ -275,9 +274,7 @@ def run_pipeline_probe(reps: int = 3) -> None:
     from perfbench.run import dataflow_s
     from perfbench.tracer import Tracer, layer_metrics
 
-    BATCH_SPANS = (
-        "tableio.commit:co_edges", "tableio.commit:mentions", "tracking.mark_units_done",
-    )
+    BATCH_SPANS = ("tableio.commit:co_edges", "tracking.mark_units_done")
     spark = _spark()
     onto = build_ontology(n_terms=pc.N_TERMS)
     cdict = pc.canon_dict(spark, onto)

@@ -16,7 +16,8 @@ Scale notes:
   collect_set) -> inline pair expansion` — one shuffle on the turn key, all
   pair expansion JVM-side (no self-join of the mentions table, which would
   shuffle twice and blow up on hot turns).
-- The term dictionary join is explicitly broadcast.
+- Node rows are built on the driver (:func:`node_rows`) from the distinct
+  mentioned ids, which the dictionary bounds; no dictionary frame is joined.
 - Final `distinct()` on edges is a shuffle on (subject, object); map-side
   partial aggregation absorbs hot pairs before the exchange.
 """
@@ -25,9 +26,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import MapType, StringType, StructField, StructType
 
 from kg_obo_spark.datagen.ontology import Ontology
-from kg_obo_spark.session import local_frame
+from kg_obo_spark.session import arrow_rows, local_frame
 
 EDGE_COLS = ["subject", "predicate", "object", "relation", "knowledge_source"]
 NODE_CORE_COLS = ["id", "category", "name", "description", "provided_by"]
@@ -38,6 +40,13 @@ ISA_PREDICATE = "biolink:subclass_of"
 ISA_RELATION = "rdfs:subClassOf"
 # rows of co_mention_batch: b NULL = "a was mentioned", else the pair a < b
 REGISTRY_SCHEMA = "a string, b string"
+# KGX node rows (node_rows); the nullability is that of the Spark-built node
+# frame earlier versions committed, so a snapshot records the same schema
+NODE_SCHEMA = StructType(
+    [StructField("id", StringType(), True)]
+    + [StructField(c, StringType(), False) for c in NODE_CORE_COLS[1:]]
+    + [StructField("properties", MapType(StringType(), StringType(), False), False)]
+)
 
 
 def rewrite_category(df: DataFrame, col: str = "category") -> DataFrame:
@@ -200,24 +209,47 @@ def co_mention_batch(
     ).distinct()
 
 
-def kg_from_registry(registry: DataFrame, onto: Ontology) -> tuple[DataFrame, DataFrame]:
+def kg_from_registry(registry: DataFrame, onto: Ontology) -> tuple[tuple, DataFrame]:
     """(nodes, edges) of the KG from accumulated :func:`co_mention_batch`
-    rows: nodes for the distinct mentioned ids (``b`` NULL), edges = the
-    co-mention pairs plus the is_a edges between mentioned ids, under one
-    distinct (a pair recurs across batches). The registry is bounded by the
-    dictionary (ids and their co-mention pairs), not by the corpus, and is
-    read once here."""
-    mentioned = registry.filter(F.col("b").isNull()).select(F.col("a").alias("id"))
-    co = registry.filter(F.col("b").isNotNull()).select(
+    rows. The registry is bounded by the dictionary (ids and their
+    co-mention pairs), not by the corpus.
+
+    The distinct mentioned ids (``b`` NULL) are collected under a Spark
+    ``distinct()``, so at most one row per dictionary term reaches the
+    driver. The driver, which holds every term already, builds from them:
+
+    - ``nodes``: driver rows ``(pa.Table, StructType)`` from
+      :func:`node_rows`, for ``Table.commit`` to write with no Spark job;
+    - the is_a edges between mentioned ids.
+
+    ``edges`` is a DataFrame: one distinct over the registry's ``(a, b)``
+    pairs (a pair recurs across batches), the constant KGX columns, and the
+    is_a rows unioned in. Pairs never reach the driver."""
+    spark = registry.sparkSession
+    mentioned = sorted(
+        r["a"] for r in registry.filter(F.col("b").isNull()).select("a").distinct().collect()
+    )
+    ks = F.lit(onto.knowledge_source).alias("knowledge_source")
+    co = registry.filter(F.col("b").isNotNull()).distinct().select(
         F.col("a").alias("subject"),
         F.lit(CO_MENTION_PREDICATE).alias("predicate"),
         F.col("b").alias("object"),
         F.lit(CO_MENTION_RELATION).alias("relation"),
-        F.lit(onto.knowledge_source).alias("knowledge_source"),
+        ks,
     )
-    nodes = build_nodes(mentioned.withColumnRenamed("id", "term_id"), onto)
-    edges = co.unionByName(isa_from_mentioned(mentioned.distinct(), onto)).distinct()
-    return nodes, edges
+    ids = set(mentioned)
+    isa = local_frame(
+        spark,
+        sorted({(s, o) for s, o in onto.is_a if s in ids and o in ids}),
+        "subject string, object string",
+    ).select(
+        "subject",
+        F.lit(ISA_PREDICATE).alias("predicate"),
+        "object",
+        F.lit(ISA_RELATION).alias("relation"),
+        ks,
+    )
+    return arrow_rows(node_rows(mentioned, onto), NODE_SCHEMA), co.unionByName(isa)
 
 
 def build_edges(
@@ -447,44 +479,46 @@ def isa_from_mentioned(mentioned: DataFrame, onto: Ontology) -> DataFrame:
     )
 
 
-def build_nodes(mentions: DataFrame, onto: Ontology) -> DataFrame:
-    """KGX node table for every distinct mentioned (canonical) term.
+def node_rows(ids, onto: Ontology) -> list[tuple]:
+    """KGX node rows (``NODE_SCHEMA``) of ``ids``, in order: the one
+    definition of a node row, shared by :func:`build_nodes` and
+    :func:`kg_from_registry`.
 
-    Core columns + a dynamic ``properties`` map (iri, synonyms |-joined, prefix)
-    — the MapType tail that models the reference's per-ontology annotation
-    columns (SURVEY §1.1)."""
-    spark = mentions.sparkSession
-    dict_df = local_frame(
-        spark,
-        [
-            (
-                t["id"],
-                t["category"],
-                t["name"],
-                "",  # description (synthetic ontology has none)
-                t["iri"],
-                "|".join(t["synonyms"]),
-                t["prefix"],
-            )
-            for t in onto.terms
-        ],
-        "id string, category string, name string, description string, "
-        "iri string, synonyms string, prefix string",
-    )
-    mentioned = mentions.select(F.col("term_id").alias("id")).distinct()
-    nodes = mentioned.join(F.broadcast(dict_df), "id", "left").select(
-        "id",
-        F.coalesce("category", F.lit("biolink:NamedThing")).alias("category"),
-        F.coalesce("name", F.lit("")).alias("name"),
-        F.coalesce("description", F.lit("")).alias("description"),
-        F.lit(onto.knowledge_source).alias("provided_by"),
-        F.map_from_arrays(
-            F.array(F.lit("iri"), F.lit("synonym"), F.lit("prefix")),
-            F.array(
-                F.coalesce("iri", F.lit("")),
-                F.coalesce("synonyms", F.lit("")),
-                F.coalesce("prefix", F.lit("")),
-            ),
-        ).alias("properties"),
-    )
-    return rewrite_category(nodes)
+    Core columns + a dynamic ``properties`` map (iri, synonyms |-joined,
+    prefix) — the MapType tail that models the reference's per-ontology
+    annotation columns (SURVEY §1.1). The category goes through the P4
+    rewrite (:func:`rewrite_category`); an id the dictionary does not hold
+    gets ``biolink:NamedThing`` and empty strings."""
+    by_id = {t["id"]: t for t in onto.terms}
+    out = []
+    for i in ids:
+        t = by_id.get(i)
+        if t is None:
+            category = name = iri = synonyms = prefix = None
+        else:
+            category, name, iri, prefix = t["category"], t["name"], t["iri"], t["prefix"]
+            synonyms = "|".join(t["synonyms"])
+        if category in (None, "biolink:OntologyClass"):
+            category = "biolink:NamedThing"
+        out.append((
+            i,
+            category,
+            _or_empty(name),
+            "",  # description (synthetic ontology has none)
+            onto.knowledge_source,
+            [("iri", _or_empty(iri)), ("synonym", _or_empty(synonyms)),
+             ("prefix", _or_empty(prefix))],
+        ))
+    return out
+
+
+def _or_empty(value: str | None) -> str:
+    return "" if value is None else value
+
+
+def build_nodes(mentions: DataFrame, onto: Ontology) -> DataFrame:
+    """KGX node table for every distinct mentioned (canonical) term: the
+    distinct ``term_id`` values are collected (one row per dictionary term
+    at most) and turned into :func:`node_rows` on the driver."""
+    ids = [r["id"] for r in mentions.select(F.col("term_id").alias("id")).distinct().collect()]
+    return local_frame(mentions.sparkSession, node_rows(ids, onto), NODE_SCHEMA)

@@ -3,22 +3,25 @@
 The distributed analog of the reference's run_transform per-ontology loop
 (/root/reference/kg_obo/transform.py:683-1330), restructured as a dataflow:
 
-    transcripts --bucket(conv_id)--> [pending units: a lineage lookup job]
+    transcripts --bucket(conv_id)--> [pending units: driver read of lineage]
         per unit batch, materialize.co_mention_batch (the same body the
         streaming sink runs):
         -> fused Arrow scan (extract + canonical rewrite + per-turn reduce)
         -> mentioned ids + co-mention pairs, one (a, b) distinct shuffle
-        -> ONE tagged append commit to ``co_edges`` + ONE lineage commit
-           (stage rows and unit-done markers together)
-    finalize: materialize.kg_from_registry reads ``co_edges`` once: nodes
-        (broadcast dict join) + co-mention and is_a edges (one distinct)
-        -> KGX node/edge snapshots + one lineage commit + tracking rotation
+        -> ONE tagged append commit to ``co_edges`` (Spark) + ONE lineage
+           commit (driver; stage rows and unit-done markers together)
+    finalize: materialize.kg_from_registry reads ``co_edges`` once:
+        -> the distinct mentioned ids, collected (at most one per term)
+        -> nodes and is_a rows built on the driver from the ontology; the
+           node snapshot is a driver commit
+        -> edges: one Spark distinct over the registry pairs + the is_a rows
+        -> one lineage commit + tracking rotation, both on the driver
 
 Gate ordering mirrors the reference: lock check -> tracking check -> work ->
 track_version -> unlock (transform.py:765-794,1195,1322-1328); a crash between
-commits resumes from the last committed unit batch (skip-if-done anti-join,
-transform.py:911-936). On an output root with lineage, that anti-join is a
-lookup of its own (one or two Spark jobs); a fresh root skips it.
+commits resumes from the last committed unit batch (skip-if-done,
+transform.py:911-936). The pending-unit lookup is a driver set difference
+over lineage's ``unit_done`` rows and runs no Spark job.
 
 Scale notes: units are hash buckets of conv_id, so resume granularity is
 independent of conversation count; all per-unit stages are conv-local (no
@@ -30,9 +33,13 @@ table is written: recovery needs only which unit batches landed.
 Bookkeeping runs no Spark job of its own: a batch's input, error, id and
 pair counts are observed (``DataFrame.observe``) on its one commit job, its
 per-partition lineage rows come from that commit's parquet footers, the
-canonical map is solved on the driver, and snapshot reads carry the schema the
-commit recorded. Only the crash-window replay (the tagged commit is skipped,
-so there is no job to observe) counts with jobs.
+canonical map is solved on the driver, lineage and tracking are read and
+written on the driver (``Table.read_arrow``, driver-row commits), and
+snapshot reads carry the schema the commit recorded. Only the crash-window
+replay (the tagged commit is skipped, so there is no job to observe) counts
+with jobs. So the Spark jobs of a run are the corpus-sized ones: per unit
+batch, the scan's shuffle-map and the registry write; in finalize, the
+mentioned-id distinct and the edge distinct with its write.
 """
 
 from __future__ import annotations
@@ -56,7 +63,6 @@ from kg_obo_spark.operators.materialize import (
     kg_from_registry,
 )
 from kg_obo_spark.plans.tracking import TrackingStore, partition_metrics, stage_rows
-from kg_obo_spark.session import local_frame
 from kg_obo_spark.sources.tableio import Lock, Table
 
 # no stage calls these; perfbench's tracer wraps them here by name, so they stay bound
@@ -128,15 +134,8 @@ def run_pipeline(
             "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
         )
         all_units = list(range(n_buckets))
-        if store.lineage.exists():
-            units_df = local_frame(
-                spark, [(str(u),) for u in all_units], "unit string"
-            )
-            pending = sorted(
-                int(r["unit"]) for r in store.pending_units(units_df).collect()
-            )
-        else:  # fresh output root: no unit is done, so no lookup job
-            pending = all_units
+        # a driver-side read of lineage's unit_done rows: no Spark job
+        pending = [int(u) for u in store.pending_units([str(u) for u in all_units])]
         skipped = sorted(set(all_units) - set(pending))
 
         # canonicalization map: tiny, solved on the driver from the ontology's

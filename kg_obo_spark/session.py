@@ -163,18 +163,13 @@ def get_spark(
     return spark
 
 
-def local_frame(
-    spark: SparkSession, rows: Iterable[tuple], schema: str | StructType
-) -> DataFrame:
-    """A DataFrame of driver-side ``rows`` (tuples in ``schema`` order),
-    built from an Arrow table.
+def arrow_rows(rows: Iterable[tuple], schema: str | StructType) -> tuple:
+    """``(pa.Table, StructType)`` of driver-side ``rows`` (tuples in
+    ``schema`` order): the one way the library turns Python rows into Arrow.
 
-    The one way the library turns a Python list into a frame. A local list
-    handed to ``createDataFrame`` becomes a pickled Python RDD
-    (``Scan ExistingRDD``), so every job that reads it runs Python tasks on
-    a worker pool of their own; an Arrow table plans as a JVM
-    ``LocalTableScan`` and runs none. Naive datetimes are read as UTC
-    instants (``pa.timestamp(tz="UTC")``), never in the host's local zone.
+    :func:`local_frame` hands the pair to Spark; ``Table.commit`` writes it
+    as parquet on the driver. Naive datetimes are read as UTC instants
+    (``pa.timestamp(tz="UTC")``), never in the host's local zone.
     """
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -185,6 +180,22 @@ def local_frame(
     table = pa.Table.from_arrays(
         [pa.array(col, type=f.type) for col, f in zip(cols, arrow)], schema=arrow
     )
+    return table, struct
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: str | StructType
+) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` (tuples in ``schema`` order),
+    built from :func:`arrow_rows`.
+
+    The one way the library turns a Python list into a frame. A local list
+    handed to ``createDataFrame`` becomes a pickled Python RDD
+    (``Scan ExistingRDD``), so every job that reads it runs Python tasks on
+    a worker pool of their own; an Arrow table plans as a JVM
+    ``LocalTableScan`` and runs none.
+    """
+    table, struct = arrow_rows(rows, schema)
     return spark.createDataFrame(table, struct)
 
 

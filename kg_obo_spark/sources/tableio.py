@@ -30,6 +30,15 @@ Append-mode manifests accumulate one data dir per commit; ``compact()``
 rewrites them into one dir so the manifest and the reader's path list stay
 bounded (Iceberg's rewrite_data_files).
 
+Two data writers, one commit point: ``commit`` takes a DataFrame, which
+Spark writes, or driver rows as ``(pa.Table, StructType)``, which
+``pyarrow.parquet`` writes as one file on the driver with no Spark job (the
+lineage, tracking and node tables are bounded by the driver's own state).
+Either way the data lands in a fresh ``data-<id>/`` and everything after it
+is one code path: sequence claim, fence, manifest, ``LATEST`` rename, tag
+marker. ``read`` returns a DataFrame of either kind of snapshot;
+``read_arrow`` reads the same chain on the driver.
+
 On a real cluster this module is replaced by an Iceberg catalog: commit ->
 ``writeTo(t).createOrReplace()``/append, lock -> optimistic commit conflict,
 snapshots -> Iceberg metadata tables.
@@ -192,7 +201,7 @@ class Table:
 
     def commit(
         self,
-        df: DataFrame,
+        df: DataFrame | tuple,
         meta: dict | None = None,
         mode: str = "overwrite",
         if_absent_tag: str | None = None,
@@ -202,6 +211,10 @@ class Table:
     ) -> Snapshot | None:
         """Write ``df`` as a new committed snapshot.
 
+        ``df`` is a DataFrame, written by Spark, or driver rows
+        ``(pa.Table, StructType)`` (``session.arrow_rows``), written by
+        ``pyarrow.parquet`` as one file with no Spark job; driver rows take
+        neither ``partition_by`` nor ``write_options``.
         mode='overwrite' replaces visible data; mode='append' unions with the
         current snapshot at read time (manifest lists both data dirs).
         ``if_absent_tag``: skip (return None) if any snapshot carries this tag —
@@ -221,16 +234,30 @@ class Table:
             base_meta["partition_by"] = partition_by
         snap_id = uuid.uuid4().hex[:16]
         data_dir = os.path.join(self.root, f"data-{snap_id}")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        if write_options:
-            writer = writer.options(**write_options)
-        writer.parquet(data_dir)
+        if isinstance(df, tuple):
+            if partition_by or write_options:
+                raise ValueError("driver rows are written unpartitioned, with default options")
+            import pyarrow.parquet as pq
+
+            table, struct = df
+            os.makedirs(data_dir)
+            # the manifest records the schema, so the file needs no Arrow copy
+            pq.write_table(
+                table, os.path.join(data_dir, f"part-00000-{snap_id}.parquet"),
+                store_schema=False,
+            )
+        else:
+            writer = df.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            if write_options:
+                writer = writer.options(**write_options)
+            writer.parquet(data_dir)
+            struct = df.schema
         # row count from parquet footers — metadata-only, never a second scan
         # of the data just written (the old read().count() re-read everything)
         n = _parquet_row_count(data_dir)
-        schema_str = df.schema.simpleString()
+        schema_str = struct.simpleString()
 
         # optimistic concurrency (Iceberg's commit conflict): the metadata
         # build races other writers, so claim the next sequence number with an
@@ -242,6 +269,18 @@ class Table:
         deadline = time.time() + 180
         while time.time() < deadline:
             prev = self.latest()
+            if (
+                prev is not None
+                and not os.path.exists(self._latest_path)
+                and self._claim_age(prev.sequence) < 60
+            ):
+                # no LATEST yet, so latest() listed the manifests, and the
+                # head one was claimed under the current protocol moments ago:
+                # that is the table's first commit, between its manifest and
+                # its LATEST rename. Basing on it would let that rename land
+                # after ours and move LATEST back, so wait for it.
+                time.sleep(0.02)
+                continue
             if expected_parent_id is not None and (
                 prev.snapshot_id if prev else None
             ) != expected_parent_id:
@@ -269,10 +308,7 @@ class Table:
                 # durable before the claim).
                 import glob as _glob
 
-                try:
-                    stale = (time.time() - os.path.getmtime(marker)) > 60
-                except FileNotFoundError:
-                    continue
+                stale = self._claim_age(seq) > 60  # inf: released meanwhile
                 if stale and not _glob.glob(
                     os.path.join(self._snap_dir, f"{seq:012d}-*.json")
                 ):
@@ -321,7 +357,7 @@ class Table:
                 # every dir of the chain is unpartitioned and holds this one
                 # schema: read() hands it to the reader instead of inferring
                 # it from footers, a Spark job per dir
-                meta["read_schema"] = df.schema.json()
+                meta["read_schema"] = struct.json()
             snap = Snapshot(
                 snapshot_id=snap_id,
                 parent_id=prev.snapshot_id if prev else None,
@@ -340,6 +376,16 @@ class Table:
                 self._write_tag_marker(if_absent_tag, snap)
             return snap
         raise RuntimeError(f"commit conflict not resolved within deadline: {self.root}")
+
+    def _claim_age(self, seq: int) -> float:
+        """Seconds since sequence ``seq`` was claimed; infinite when it has
+        no marker (a table written before sequence claims existed)."""
+        try:
+            return time.time() - os.path.getmtime(
+                os.path.join(self._snap_dir, f".seq-{seq:012d}")
+            )
+        except FileNotFoundError:
+            return float("inf")
 
     def _write_commit(
         self, snap: Snapshot, fence_path: str | None = None,
@@ -493,6 +539,47 @@ class Table:
         return reduce(
             lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
         )
+
+    def read_arrow(self, columns: list[str] | None = None):
+        """The latest snapshot of an unpartitioned table as a ``pa.Table``,
+        read on the driver with no Spark job.
+
+        Each data dir of the chain is cast to the head snapshot's recorded
+        schema (a column missing from an older dir reads as null): Spark
+        writes timestamps as INT96, which pyarrow reads as zone-less
+        nanoseconds, while driver-written dirs hold UTC microseconds, so a
+        chain holding both kinds has two physical schemas for one table."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import StructType, _parse_datatype_string
+
+        snap = self.latest()
+        if snap is None:
+            raise FileNotFoundError(f"no committed snapshot in {self.root}")
+        if snap.meta.get("read_schema"):
+            struct = StructType.fromJson(json.loads(snap.meta["read_schema"]))
+        else:
+            struct = _parse_datatype_string(snap.meta["schema"])
+        target = to_arrow_schema(struct)
+        if columns is not None:
+            target = pa.schema([target.field(c) for c in columns])
+        parts = []
+        for d in json.loads(snap.data_dir):
+            dataset = ds.dataset(d, format="parquet")
+            part = dataset.to_table(
+                columns=[f.name for f in target if f.name in dataset.schema.names]
+            )
+            parts.append(pa.Table.from_arrays(
+                [
+                    part.column(f.name).cast(f.type)
+                    if f.name in part.column_names
+                    else pa.nulls(part.num_rows, f.type)
+                    for f in target
+                ],
+                schema=target,
+            ))
+        return pa.concat_tables(parts)
 
     def expire_snapshots(self, keep: int = 1) -> dict:
         """Drop history: keep the ``keep`` newest snapshots' manifests, delete

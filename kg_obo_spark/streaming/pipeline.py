@@ -12,16 +12,17 @@ Structured Streaming, with the same two functions:
 - at read time (:func:`read_kg_edges`):
   :func:`~kg_obo_spark.operators.materialize.kg_from_registry` over the
   accumulated rows — co edges = distinct over the appended pairs; is_a edges
-  come from the ACCUMULATED mentioned ids, crucially NOT per batch: an is_a
+  come from the ACCUMULATED mentioned ids (collected under a distinct), crucially NOT per batch: an is_a
   edge whose endpoints were first mentioned in different micro-batches exists
   in the final graph (pinned by test against the batch `build_edges` on the
   full corpus).
 
 Work per trigger is bounded by the micro-batch (the scan is map-only; the
 distinct is batch-local); the only accumulated state is the registry, bounded
-by the dictionary. Unlike ``run_pipeline``, whose pending-unit lookup over
-lineage runs Spark jobs, the stream has no lookup of its own: its checkpoint
-names the next epoch, and a replayed epoch's tag check is a file stat.
+by the dictionary. Unlike ``run_pipeline``, which reads lineage on the
+driver to find its pending units, the stream has no lookup of its own: its
+checkpoint names the next epoch, and a replayed epoch's tag check is a file
+stat.
 """
 
 from __future__ import annotations

@@ -77,23 +77,38 @@ def test_library_builds_driver_frames_only_through_local_frame():
 
 
 def test_committed_at_is_the_true_utc_instant_under_a_non_utc_host_zone(tmp_path):
-    """``tracking._now()`` is a naive UTC datetime; the committed lineage row
-    must hold that instant, not the one the host's local zone would give it.
+    """``tracking._now()`` is a naive UTC datetime; a committed lineage row
+    must hold that instant, not the one the host's local zone would give it,
+    whether Spark wrote it (a ``local_frame``) or the driver did
+    (``commit_lineage``), and whether Spark or ``read_arrow`` reads it back.
     Runs in a subprocess so ``TZ`` takes effect for the whole interpreter."""
     script = textwrap.dedent(
         f"""
         import calendar, json
-        from kg_obo_spark.session import get_spark
-        from kg_obo_spark.plans.tracking import TrackingStore, stage_rows
+        from kg_obo_spark.session import get_spark, local_frame
+        from kg_obo_spark.plans.tracking import LINEAGE_SCHEMA, TrackingStore, stage_rows
 
         spark = get_spark(master="local[1]", shuffle_partitions=1)
         store = TrackingStore({str(tmp_path / "kg")!r})
-        rows = stage_rows("run", "probe", 1, 1)
-        store.commit_lineage(spark, rows)
-        got = store.lineage.read(spark).selectExpr(
-            "cast(committed_at as long) AS s"
-        ).first()["s"]
-        print(json.dumps({{"got": got, "want": calendar.timegm(rows[0][-1].timetuple())}}))
+        spark_rows = stage_rows("run", "spark", 1, 1)
+        store.lineage.commit(local_frame(spark, spark_rows, LINEAGE_SCHEMA), mode="append")
+        driver_rows = stage_rows("run", "driver", 1, 1)
+        store.commit_lineage(spark, driver_rows)
+        got = {{
+            r["stage"]: r["s"]
+            for r in store.lineage.read(spark).selectExpr(
+                "stage", "cast(committed_at as long) AS s"
+            ).collect()
+        }}
+        arrow = {{
+            r["stage"]: calendar.timegm(r["committed_at"].utctimetuple())
+            for r in store.lineage.read_arrow().to_pylist()
+        }}
+        want = {{
+            rows[0][1]: calendar.timegm(rows[0][-1].timetuple())
+            for rows in (spark_rows, driver_rows)
+        }}
+        print(json.dumps({{"got": got, "arrow": arrow, "want": want}}))
         spark.stop()
         """
     )
@@ -104,4 +119,4 @@ def test_committed_at_is_the_true_utc_instant_under_a_non_utc_host_zone(tmp_path
     )
     assert out.returncode == 0, out.stderr[-2000:]
     res = json.loads(out.stdout.strip().splitlines()[-1])
-    assert res["got"] == res["want"], res
+    assert res["got"] == res["arrow"] == res["want"], res

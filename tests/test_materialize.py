@@ -151,6 +151,84 @@ def test_co_mention_batch_rows_and_registry_kg(spark, onto):
     assert (child, "biolink:subclass_of", parent) in {
         (r["subject"], r["predicate"], r["object"]) for r in edges.collect()
     }
-    assert {r["id"] for r in nodes.collect()} == {
+    assert set(nodes[0].column("id").to_pylist()) == {
         r["term_id"] for r in extract_mentions(whole, onto).collect()
     }
+
+
+def _spark_built_nodes(mentions, onto):
+    """The node frame earlier versions built and committed with Spark: a
+    broadcast join of the mentioned ids against a dictionary frame, then
+    defaults and the P4 category rewrite as column expressions."""
+    from kg_obo_spark.session import local_frame
+
+    dict_df = local_frame(
+        mentions.sparkSession,
+        [
+            (t["id"], t["category"], t["name"], "", t["iri"], "|".join(t["synonyms"]), t["prefix"])
+            for t in onto.terms
+        ],
+        "id string, category string, name string, description string, "
+        "iri string, synonyms string, prefix string",
+    )
+    mentioned = mentions.select(F.col("term_id").alias("id")).distinct()
+    nodes = mentioned.join(F.broadcast(dict_df), "id", "left").select(
+        "id",
+        F.coalesce("category", F.lit("biolink:NamedThing")).alias("category"),
+        F.coalesce("name", F.lit("")).alias("name"),
+        F.coalesce("description", F.lit("")).alias("description"),
+        F.lit(onto.knowledge_source).alias("provided_by"),
+        F.map_from_arrays(
+            F.array(F.lit("iri"), F.lit("synonym"), F.lit("prefix")),
+            F.array(
+                F.coalesce("iri", F.lit("")),
+                F.coalesce("synonyms", F.lit("")),
+                F.coalesce("prefix", F.lit("")),
+            ),
+        ).alias("properties"),
+    )
+    return rewrite_category(nodes)
+
+
+def test_node_rows_are_one_definition_for_both_node_builders(spark, onto, tmp_path):
+    """``node_rows`` is the one definition of a KGX node row: exact rows
+    (the ``properties`` key order, OntologyClass -> NamedThing, another
+    category kept, defaults for an id the dictionary lacks), the schema
+    ``build_nodes`` returns, and a committed finalize node snapshot that a
+    Spark read gives with the rows and ``StructType`` of the Spark-built
+    node frame earlier versions committed."""
+    import dataclasses
+
+    from kg_obo_spark.operators.materialize import NODE_SCHEMA, kg_from_registry, node_rows
+    from kg_obo_spark.sources.tableio import Table
+
+    t0, t1 = onto.terms[0], dict(onto.terms[1], category="biolink:Gene")
+    small = dataclasses.replace(onto, terms=[t0, t1])
+    ks = onto.knowledge_source
+    assert t0["category"] == "biolink:OntologyClass"
+    assert node_rows([t1["id"], "X:404", t0["id"]], small) == [
+        (t1["id"], "biolink:Gene", t1["name"], "", ks,
+         [("iri", t1["iri"]), ("synonym", "|".join(t1["synonyms"])), ("prefix", t1["prefix"])]),
+        ("X:404", "biolink:NamedThing", "", "", ks, [("iri", ""), ("synonym", ""), ("prefix", "")]),
+        (t0["id"], "biolink:NamedThing", t0["name"], "", ks,
+         [("iri", t0["iri"]), ("synonym", "|".join(t0["synonyms"])), ("prefix", t0["prefix"])]),
+    ]
+
+    ids = [t0["id"], t1["id"], "X:404"]
+    m = _mentions(spark, [("c1", 0, i) for i in ids] + [("c2", 0, t0["id"])])
+    want = _spark_built_nodes(m, small)
+    built = build_nodes(m, small)
+    assert built.schema == want.schema == NODE_SCHEMA
+    assert sorted(built.collect()) == sorted(want.collect())
+
+    registry = spark.createDataFrame(
+        [(i, None) for i in ids] + [(t0["id"], t1["id"])], "a string, b string"
+    )
+    driver, spark_written = Table(str(tmp_path / "driver")), Table(str(tmp_path / "spark"))
+    driver.commit(kg_from_registry(registry, small)[0])
+    spark_written.commit(want)
+    assert driver.latest().meta["read_schema"] == spark_written.latest().meta["read_schema"]
+    got, ref = driver.read(spark), spark_written.read(spark)
+    assert got.schema == ref.schema
+    assert sorted(got.collect()) == sorted(ref.collect())
+    assert [list(r["properties"]) for r in got.collect()] == [["iri", "synonym", "prefix"]] * 3

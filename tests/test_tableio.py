@@ -226,9 +226,10 @@ def test_mark_units_done_is_one_commit(spark, tmp_path):
     store = TrackingStore(str(tmp_path))
     store.mark_units_done(spark, "r1", ["0", "1", "2", "3"])
     assert len(store.lineage.snapshots()) == 1  # one snapshot for the batch
-    units = spark.createDataFrame([(str(u),) for u in range(6)], "unit string")
-    pending = sorted(r["unit"] for r in store.pending_units(units).collect())
-    assert pending == ["4", "5"]
+    # the pending lookup is a driver set difference, in the order asked
+    assert store.pending_units([str(u) for u in (5, 0, 4, 2)]) == ["5", "4"]
+    done = store.lineage.read(spark).filter(F.col("stage") == "unit_done")
+    assert sorted(r["snapshot_id"] for r in done.collect()) == ["0", "1", "2", "3"]
 
 
 def test_legacy_table_without_latest_pointer_still_reads(spark, tmp_path):
@@ -646,3 +647,161 @@ def test_plain_snapshot_read_carries_schema_and_runs_no_job(spark, tmp_path):
     t.commit(df.withColumn("extra", F.lit(1)), mode="append")
     assert t.latest().meta["merged_schema"] and "read_schema" not in t.latest().meta
     assert t.read(spark).count() == 6
+
+
+def test_driver_bookkeeping_runs_no_spark_job(spark, tmp_path):
+    """Lineage and tracking are written and read on the driver: a batch's
+    unit-done commit, a lineage commit, a first tracked version, a rotation
+    and the pending-unit lookup on a root with lineage start no Spark job."""
+    from kg_obo_spark.plans.tracking import stage_rows
+    from tests.conftest import count_jobs
+
+    store = TrackingStore(str(tmp_path))
+    with count_jobs(spark) as jobs:
+        store.mark_units_done(spark, "r1", ["0", "1"], stage_rows("r1", "co_edges", 3, 2))
+        store.commit_lineage(spark, stage_rows("r1", "materialize_nodes", 0, 5))
+        store.track_version(spark, "bfo", "iri-v1", "v1")
+        store.track_version(spark, "bfo", "iri-v2", "v2")
+        pending = store.pending_units(["0", "1", "2"])
+    assert jobs["n"] == 0, jobs
+    assert pending == ["2"]
+    assert len(store.lineage.snapshots()) == 2
+    row = store.read_tracking(spark).first()
+    assert (row["current_version"], [tuple(a) for a in row["archive"]]) == (
+        "v2", [("iri-v1", "v1")]
+    )
+
+
+def test_read_arrow_of_a_mixed_lineage_chain_equals_the_spark_read(spark, tmp_path):
+    """A root written before lineage commits went through the driver holds
+    Spark-written lineage dirs (``committed_at`` as INT96, which pyarrow
+    reads as zone-less nanoseconds) ahead of driver-written ones (UTC
+    microseconds). ``read_arrow`` casts every dir to the recorded schema, so
+    the chain reads whole and equals ``Table.read``."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from kg_obo_spark.plans.tracking import LINEAGE_SCHEMA, stage_rows
+    from kg_obo_spark.session import local_frame
+
+    store = TrackingStore(str(tmp_path))
+    store.lineage.commit(
+        local_frame(spark, stage_rows("r1", "co_edges", 3, 2, snapshot_id="s1"), LINEAGE_SCHEMA),
+        mode="append",
+    )
+    store.mark_units_done(spark, "r2", ["0"], stage_rows("r2", "extract+link", 4, 1))
+    first, second = json.loads(store.lineage.latest().data_dir)
+    assert pq.read_table(first).schema.field("committed_at").type == "timestamp[ns]"
+    assert str(pq.read_table(second).schema.field("committed_at").type) == (
+        "timestamp[us, tz=UTC]"
+    )
+
+    got = store.lineage.read_arrow()
+    want = store.lineage.read(spark)
+    assert got.schema == to_arrow_schema(want.schema)
+    key = [(c, "ascending") for c in ("run_id", "stage", "snapshot_id")]
+    assert got.sort_by(key).equals(want.toArrow().sort_by(key))
+    assert got.num_rows == 3
+    assert store.lineage.read_arrow(columns=["snapshot_id", "stage"]).column_names == [
+        "snapshot_id", "stage"
+    ]
+
+
+def test_driver_rows_commit_like_a_frame(spark, tmp_path):
+    """Driver rows ``(pa.Table, StructType)`` go through the same commit
+    protocol as a DataFrame: tagged appends skip, the snapshot records the
+    schema, and a Spark read equals the Spark-written twin's rows and
+    schema. They take no partitioning or writer options."""
+    from datetime import datetime
+
+    from kg_obo_spark.session import arrow_rows, local_frame
+
+    rows = [
+        (1, "a", [1, 2], [("k", 1.5)], (7, "x"), datetime(2026, 1, 1, 12, 30)),
+        (2, None, [], [], (8, None), None),
+    ]
+    schema = (
+        "id long, s string, xs array<int>, m map<string,double>, "
+        "st struct<n:int, t:string>, ts timestamp"
+    )
+    driver, frame = Table(str(tmp_path / "driver")), Table(str(tmp_path / "frame"))
+    assert driver.commit(arrow_rows(rows, schema), mode="append", if_absent_tag="t")
+    assert driver.commit(arrow_rows(rows, schema), mode="append", if_absent_tag="t") is None
+    driver.commit(arrow_rows(rows, schema), mode="append")
+    for _ in range(2):
+        frame.commit(local_frame(spark, rows, schema), mode="append")
+    d, f = driver.latest(), frame.latest()
+    assert (d.row_count, d.meta["schema"], d.meta["read_schema"]) == (
+        f.row_count, f.meta["schema"], f.meta["read_schema"]
+    )
+    assert driver.has_tag("t") and driver.snapshot_by_tag("t").sequence == 0
+    got, want = driver.read(spark), frame.read(spark)
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert got.collect() == want.collect()
+    with pytest.raises(ValueError, match="unpartitioned"):
+        driver.commit(arrow_rows(rows, schema), partition_by=["id"])
+
+
+def test_driver_written_bookkeeping_reads_as_the_spark_written(spark, tmp_path):
+    """Lineage and tracking snapshots the driver writes read in Spark with
+    the rows and ``StructType`` of the same rows written by Spark (the
+    frames earlier versions committed)."""
+    from kg_obo_spark.plans.tracking import LINEAGE_SCHEMA, TRACKING_SCHEMA, stage_rows
+    from kg_obo_spark.session import local_frame
+
+    store = TrackingStore(str(tmp_path / "driver"))
+    rows = stage_rows("r1", "co_edges", 3, 2, snapshot_id="s", per_partition=[(0, 1), (2, 1)])
+    store.commit_lineage(spark, rows)
+    store.track_version(spark, "go", "urn:go:1", "v1")
+    store.track_version(spark, "hp", "urn:hp:1", "h1")
+    store.track_version(spark, "go", "urn:go:2", "v2")
+    lineage, tracking = Table(str(tmp_path / "l")), Table(str(tmp_path / "t"))
+    lineage.commit(local_frame(spark, rows, LINEAGE_SCHEMA), mode="append")
+    tracking.commit(local_frame(
+        spark,
+        [("hp", "urn:hp:1", "h1", []), ("go", "urn:go:2", "v2", [("urn:go:1", "v1")])],
+        TRACKING_SCHEMA,
+    ))
+    for got, want in ((store.lineage, lineage), (store.tracking, tracking)):
+        assert got.latest().meta["read_schema"] == want.latest().meta["read_schema"]
+        g, w = got.read(spark), want.read(spark)
+        assert g.schema == w.schema
+        assert sorted(g.collect()) == sorted(w.collect())
+
+
+def test_commit_waits_for_a_first_commit_in_flight(spark, tmp_path):
+    """Before a table's first ``LATEST`` rename, ``latest()`` lists the
+    manifests, so it sees the first commit's manifest while that commit is
+    still in flight. A second writer must wait for the rename instead of
+    basing on it: otherwise the first writer's rename lands after the
+    second's and moves ``LATEST`` back, and every later commit waits on a
+    sequence that is already taken until its deadline."""
+    import threading
+    import time
+
+    from kg_obo_spark.session import arrow_rows
+
+    t = Table(str(tmp_path / "t"))
+    first = t.commit(arrow_rows([(1,)], "id long"))
+    # replay the first commit's state between its manifest and its LATEST
+    # rename: sequence claimed, manifest written, no pointer yet
+    pointer = json.loads(open(t._latest_path).read())
+    os.remove(t._latest_path)
+    assert t.latest().snapshot_id == first.snapshot_id  # the listing sees it
+    done = {}
+    writer = threading.Thread(
+        target=lambda: done.update(
+            snap=Table(t.root).commit(arrow_rows([(2,)], "id long"), mode="append")
+        )
+    )
+    writer.start()
+    time.sleep(0.5)
+    assert "snap" not in done  # waiting on the pending rename
+    with open(t._latest_path, "w") as f:  # the first writer's rename lands
+        f.write(json.dumps(pointer))
+    writer.join(timeout=30)
+    second = done["snap"]
+    assert (second.sequence, second.parent_id) == (1, first.snapshot_id)
+    assert t.latest().snapshot_id == second.snapshot_id
+    assert sorted(r["id"] for r in t.read(spark).collect()) == [1, 2]

@@ -3,7 +3,7 @@
 Usage, from the repository root:
 
     python3 tools/task_floor.py [--partitions 1,4,16,64] [--reps 3] [--cpus N]
-    python3 tools/task_floor.py --local-rows [--reps N] [--cpus N]
+    python3 tools/task_floor.py --local-rows [--reps 15] [--cpus N]
 
 For each partition count N it runs, ``--reps`` times after one warm-up:
 
@@ -28,6 +28,17 @@ is built both ways, in alternating order, ``--reps`` times after one warm-up:
 
 For each it prints the median ``executorRunTime`` of the write's tasks, the
 median wall time of the build plus write, and the tasks per write.
+
+Then it times the same two rows committed as one lineage snapshot
+(``Table.commit`` append to a fresh table) through each of the commit's data
+writers, alternating, ``--reps`` times after one warm-up:
+
+- ``spark``: a ``local_frame`` written by Spark (a parquet write job);
+- ``driver``: ``session.arrow_rows`` written by ``pyarrow.parquet`` on the
+  driver (no job).
+
+For each it prints the median wall time of the commit and the Spark tasks
+per commit.
 """
 
 from __future__ import annotations
@@ -137,12 +148,51 @@ def local_rows_leg(spark, reps: int) -> None:
             f"{statistics.median(g['wall']):>8.3f}  "
             f"{statistics.median(g['tasks']):>5g}"
         )
+    commit_leg(spark, rows, reps)
+
+
+def commit_leg(spark, rows: list[tuple], reps: int) -> None:
+    """Time ``rows`` committed as one lineage snapshot through each of
+    ``Table.commit``'s data writers."""
+    from kg_obo_spark.plans.tracking import LINEAGE_SCHEMA
+    from kg_obo_spark.session import arrow_rows, local_frame
+    from kg_obo_spark.sources.tableio import Table
+
+    sc = spark.sparkContext
+    writers = {
+        "spark": lambda: local_frame(spark, rows, LINEAGE_SCHEMA),
+        "driver": lambda: arrow_rows(rows, LINEAGE_SCHEMA),
+    }
+    got = {name: {"wall": [], "tasks": []} for name in writers}
+    out = tempfile.mkdtemp(prefix="task_floor_")
+    try:
+        for rep in range(reps + 1):
+            order = list(writers) if rep % 2 else list(writers)[::-1]
+            for name in order:
+                table = Table(os.path.join(out, uuid.uuid4().hex))
+                wall, tasks, _ = timed(
+                    sc, lambda: table.commit(writers[name](), mode="append")
+                )
+                if rep:  # rep 0 warms both writers
+                    got[name]["wall"].append(wall)
+                    got[name]["tasks"].append(len(tasks))
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+    print(f"{'writer':>10}  {'commit s':>8}  {'tasks':>5}")
+    for name, g in got.items():
+        print(
+            f"{name:>10}  {statistics.median(g['wall']):>8.4f}  "
+            f"{statistics.median(g['tasks']):>5g}"
+        )
 
 
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--partitions", default="1,4,16,64")
-    ap.add_argument("--reps", type=int, default=3)
+    ap.add_argument(
+        "--reps", type=int, default=None,
+        help="timed repetitions after one warm-up (default 3; 15 with --local-rows)",
+    )
     ap.add_argument("--cpus", type=int, default=len(os.sched_getaffinity(0)))
     ap.add_argument(
         "--local-rows", action="store_true",
@@ -166,7 +216,7 @@ def main() -> None:
     print(f"# {args.cpus} cpus, Python {platform.python_version()}, PySpark {pyspark.__version__}")
     if args.local_rows:
         try:
-            local_rows_leg(spark, args.reps)
+            local_rows_leg(spark, args.reps or 15)
         finally:
             spark.stop()
         return
@@ -180,7 +230,7 @@ def main() -> None:
             df = spark.range(0, n, numPartitions=n)
             arrow, jvm = {"wall": [], "task": []}, {"wall": [], "task": []}
             rows = []
-            for rep in range(args.reps + 1):
+            for rep in range((args.reps or 3) + 1):
                 a_wall, a_tasks, got = timed(
                     sc, lambda: df.mapInArrow(worker_probe, schema).collect()
                 )
