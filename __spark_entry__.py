@@ -197,9 +197,7 @@ def _doc_turn_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).alias("turn_idx"),
         F.col("text"),
     )
-    return extract_turn_terms(
-        ensure_scan_parallelism(tr_shape), _doc_ontology()
-    )
+    return extract_turn_terms(tr_shape, _doc_ontology())
 
 
 def q_kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,7 +23,7 @@ batched-vs-per-row property suite):
   repaired by the reference's normalize_id logic
   (/root/reference/kg_obo/robot_utils.py:286-311) and the capitalized-prefix
   dual keys (/root/reference/kg_obo/transform.py:615-621). Fallback for
-  non-ASCII batches and non-token-model dictionaries.
+  non-ASCII batches and non-token-model dictionaries (``find_batch_regex``).
 """
 
 from __future__ import annotations
@@ -72,12 +72,6 @@ def _trie_pattern(words: list[str]) -> str:
 
 # ---------------------------------------------------------------- matcher
 
-
-import os as _os
-
-#: A/B harness + safety hatch: set KG_OBO_SPARK_FASTSCAN=0 before the session
-#: starts to force the regex batch path everywhere.
-_FASTSCAN_ENABLED = _os.environ.get("KG_OBO_SPARK_FASTSCAN", "1") != "0"
 
 #: Degradation ladder for the repair path — the distributed analog of the
 #: reference's robot convert fallback chain (robot_utils.py:108-143: full
@@ -149,8 +143,8 @@ class TermMatcher:
         ``best_only=True`` keeps one candidate per span (highest score, term_id
         asc) — this is the default pipeline path and means 1-best entity linking
         costs NO shuffle: every span's candidates are produced by the same task.
-        ``best_only=False`` emits all candidates (resolve later with
-        operators.extract.link_best).
+        ``best_only=False`` also emits the other candidates of each winning
+        span.
         """
         cands: list[tuple[int, int, int, str, str, float]] = []
         self._collect_id_cands(text, 0, cands)
@@ -238,19 +232,18 @@ class TermMatcher:
         ``(row_idx, start, end, surfaces, term_ids, scores)`` numpy arrays
         (surfaces is a list or None). Returns None when the batch is outside
         the fast path (non-ASCII text, surface set outside the token model) —
-        callers then use the regex ``find_batch``. Semantics are identical to
-        :meth:`find` row by row (pinned by tests/test_properties.py).
+        callers then use :meth:`find_batch_regex`. Semantics are identical
+        to :meth:`find` row by row (pinned by tests/test_properties.py).
 
         The scan is internally CHUNKED to ~750 KB of text: with many Python
         workers in parallel the whole-batch array working set thrashes the
         shared cache (measured 1.7x aggregate throughput loss at 16-way on
         this VM); cache-sized chunks keep the vectorized win under
-        contention. ``KG_OBO_SPARK_FASTSCAN=0`` disables the fast path (A/B
-        harness and safety hatch; workers read it at import)."""
+        contention."""
         import numpy as np
 
         n = len(texts)
-        if n == 0 or not _FASTSCAN_ENABLED:
+        if n == 0:
             return None
         scanner = self._get_scanner()
         clean = [t if t is not None else "" for t in texts]
@@ -335,13 +328,42 @@ class TermMatcher:
         self._canon_rank_cache = (canon, cr, cu_arr)
         return cr, cu_arr
 
+    def term_ranks(self, term_ids) -> "np.ndarray":
+        """The scanner ranks of term-id strings — the term column
+        ``find_batch_columnar(as_ranks=True)`` gives — for the ids the regex
+        engine found, so both engines feed :meth:`canon_rank_table`."""
+        import numpy as np
+
+        rank = self._get_scanner()._tid_rank
+        return np.fromiter(
+            map(rank.__getitem__, term_ids), dtype=np.int64, count=len(term_ids)
+        )
+
     def find_batch(
         self, texts: list, best_only: bool = True
     ) -> list[list[tuple[int, int, str, str, float]]]:
         """Batched :meth:`find`: the vectorized columnar scanner when the
-        batch qualifies (ASCII, token-model dictionary), else ONE regex pass
-        per pattern over the whole Arrow batch instead of two ``finditer``
-        calls per row.
+        batch qualifies (ASCII, token-model dictionary), else
+        :meth:`find_batch_regex`."""
+        n = len(texts)
+        if n == 0:
+            return []
+        cols = self.find_batch_columnar(texts, best_only=best_only)
+        if cols is None:
+            return self.find_batch_regex(texts, best_only)
+        row, rs, re_, surfs, tids, scores = cols
+        out: list[list] = [[] for _ in range(n)]
+        rl, sl, el, scl = row.tolist(), rs.tolist(), re_.tolist(), scores.tolist()
+        for i in range(len(rl)):
+            out[rl[i]].append((sl[i], el[i], surfs[i], tids[i], scl[i]))
+        return out
+
+    def find_batch_regex(
+        self, texts: list, best_only: bool = True
+    ) -> list[list[tuple[int, int, str, str, float]]]:
+        """Batched :meth:`find` on the regex engine, for any text: ONE regex
+        pass per pattern over the whole Arrow batch instead of two
+        ``finditer`` calls per row.
 
         The rows are joined with ``\\x00`` separators — NUL is outside every
         boundary class ([^A-Za-z0-9_] lookarounds), so row edges behave
@@ -354,16 +376,6 @@ class TermMatcher:
         import bisect
 
         n = len(texts)
-        if n == 0:
-            return []
-        cols = self.find_batch_columnar(texts, best_only=best_only)
-        if cols is not None:
-            row, rs, re_, surfs, tids, scores = cols
-            out: list[list] = [[] for _ in range(n)]
-            rl, sl, el, scl = row.tolist(), rs.tolist(), re_.tolist(), scores.tolist()
-            for i in range(len(rl)):
-                out[rl[i]].append((sl[i], el[i], surfs[i], tids[i], scl[i]))
-            return out
         clean = [t if t is not None else "" for t in texts]
         big = "\x00".join(clean)
         starts = [0] * n

@@ -2,17 +2,20 @@
 
 This is the engine's replacement for the reference's per-ontology parse stages
 (regex scans over raw OWL text, /root/reference/kg_obo/transform.py:223-346 and
-:501-523): instead of mmap+regex over one file on one machine, an Arrow-batched
-``mapInPandas`` stage scans the ``text`` column against the broadcast dictionary.
+:501-523): instead of mmap+regex over one file on one machine, one Arrow-batched
+``mapInArrow`` kernel (:func:`_scan`) scans the ``text`` column against the
+broadcast dictionary. It emits one of two shapes: offset-level mentions
+(:func:`extract_mentions`) or each turn's canonical term set
+(:func:`extract_turn_terms`).
 
 Invariants (BASELINE.json input_hint):
 - per-turn text equality: ``text`` is never mutated; mentions carry offsets into
   the original string, verified by ``tests/test_extract.py``.
 - stable (conv_id, turn_idx) ordering: mentions keep both keys; within a turn,
   emission order is (start, end, term_id) — deterministic.
-- no per-row Python UDFs: the scan is a vectorized Arrow stage; the regex engine
-  does the per-character work in C, and the matcher is compiled once per worker
-  (see dictionary.get_matcher).
+- no per-row Python UDFs: the scan is a vectorized Arrow stage; the matcher's
+  engines do the per-character work in C/numpy, and the matcher is compiled
+  once per worker (see dictionary.get_matcher).
 
 Scale notes: the output carries offsets + surface, not the full text, so the
 shuffle after extraction moves a small fraction of input bytes. The stage is
@@ -22,12 +25,10 @@ the input (bucketed by conv_id).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from kg_obo_spark.datagen.ontology import Ontology
 from kg_obo_spark.dictionary import get_matcher
@@ -37,6 +38,7 @@ MENTIONS_SCHEMA = (
     "conv_id string, turn_idx int, start int, end int, "
     "surface string, term_id string, score double"
 )
+TURN_TERMS_SCHEMA = "conv_id string, turn_idx int, terms array<string>"
 
 
 # Unique sentinel embedded in every ExtractionError message. The error is
@@ -70,96 +72,19 @@ class ExtractionError(RuntimeError):
 def extract_mentions(
     transcripts: DataFrame,
     onto: Ontology,
-    all_candidates: bool = False,
     degradation_level: int = 0,
     max_candidates_per_turn: int | None = None,
 ) -> DataFrame:
     """transcripts -> mentions(conv_id, turn_idx, start, end, surface, term_id, score).
 
-    Default (``all_candidates=False``): 1-best linking is resolved inside the
-    scan task (candidates for a span are always co-located), so linking costs no
-    shuffle. With ``all_candidates=True`` every candidate term per span is
-    emitted; resolve later with :func:`link_best`.
+    1-best linking is resolved inside the scan task (candidates for a span
+    are always co-located), so linking costs no shuffle.
 
     ``degradation_level`` selects a reduced pattern set (repair ladder — see
     ``dictionary.MAX_DEGRADATION_LEVEL``); ``max_candidates_per_turn`` raises
     :class:`ExtractionError` when one turn explodes past the budget.
     """
-    best_only = not all_candidates
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        matcher = get_matcher(onto, degradation_level)
-        for pdf in batches:
-            texts = pdf["text"].to_numpy()
-            # columnar vectorized scan (fastscan) when the batch qualifies:
-            # the result frame is assembled straight from the match arrays,
-            # no per-mention tuples anywhere
-            cols = matcher.find_batch_columnar(
-                list(texts), best_only=best_only, need_surface=True
-            )
-            if cols is not None:
-                ridx, st, en, surfs, tids, scores = cols
-                counts = np.bincount(ridx, minlength=len(pdf))
-            else:
-                # regex fallback (non-ASCII batch / non-token dictionary);
-                # None text -> no matches (diverted rows are counted upstream
-                # by split_valid_turns)
-                batch_found = matcher.find_batch(list(texts), best_only=best_only)
-                counts = np.fromiter(
-                    (len(f) for f in batch_found),
-                    dtype=np.int64,
-                    count=len(batch_found),
-                )
-            if max_candidates_per_turn is not None and counts.size:
-                worst = int(counts.argmax())
-                if counts[worst] > max_candidates_per_turn:
-                    raise ExtractionError(
-                        str(pdf["conv_id"].iloc[worst]),
-                        int(pdf["turn_idx"].iloc[worst]),
-                        int(counts[worst]),
-                        max_candidates_per_turn,
-                    )
-            if cols is not None:
-                yield pd.DataFrame(
-                    {
-                        "conv_id": pdf["conv_id"].to_numpy()[ridx],
-                        "turn_idx": pdf["turn_idx"].to_numpy()[ridx].astype("int32"),
-                        "start": st.astype(np.int32),
-                        "end": en.astype(np.int32),
-                        "surface": np.array(surfs, dtype=object),
-                        "term_id": tids,
-                        "score": scores,
-                    }
-                )
-                continue
-            # flatten once; key columns come from vectorized fancy indexing
-            # instead of per-mention Python appends
-            ridx = np.repeat(np.arange(len(batch_found)), counts)
-            flat = [mn for f in batch_found for mn in f]
-            n = len(flat)
-            # object-dtype string columns: Arrow consumes them directly; the
-            # pandas StringDtype conversion was a measurable extra pass
-            yield pd.DataFrame(
-                {
-                    "conv_id": pdf["conv_id"].to_numpy()[ridx],
-                    "turn_idx": pdf["turn_idx"].to_numpy()[ridx].astype("int32"),
-                    "start": np.fromiter((x[0] for x in flat), dtype=np.int32, count=n),
-                    "end": np.fromiter((x[1] for x in flat), dtype=np.int32, count=n),
-                    "surface": np.array([x[2] for x in flat], dtype=object),
-                    "term_id": np.array([x[3] for x in flat], dtype=object),
-                    "score": np.fromiter((x[4] for x in flat), dtype=np.float64, count=n),
-                }
-            )
-
-    # only the columns the scan needs — lets Catalyst prune the parquet read.
-    # r8: spread underfilled scans (single-row-group inputs otherwise run the
-    # whole Arrow stage on one core — guide §2.5); no-op on parallel inputs,
-    # so the fused-pipeline path (extract_turn_terms) keeps its map-only plan.
-    return ensure_scan_parallelism(
-        transcripts.select("conv_id", "turn_idx", "text")
-    ).mapInPandas(scan, schema=MENTIONS_SCHEMA)
+    return _scan(transcripts, onto, False, {}, degradation_level, max_candidates_per_turn)
 
 
 def extract_turn_terms(
@@ -180,190 +105,122 @@ def extract_turn_terms(
     fast path of canonical_map produces). Turns with no mentions emit no row,
     matching groupBy semantics. This is the scan of the pipeline's per-batch
     body (materialize.co_mention_batch), which both ``run_pipeline`` and the
-    streaming sink run; the offset-level mentions path (extract_mentions)
+    streaming sink run; the offset-level mentions shape (extract_mentions)
     serves the registry queries that need spans, and no pipeline commit.
 
     ``degradation_level`` and ``max_candidates_per_turn`` are
     :func:`extract_mentions`' repair-ladder knobs: a row whose best-only
     match count exceeds the budget raises :class:`ExtractionError`, on the
-    fast path and on the regex path alike.
-
-    Arrow-native stage (``mapInArrow``): texts come out of the RecordBatch via
-    ``to_pylist`` (C) and key columns go back via Arrow ``take`` — no pandas
-    Series/DataFrame materialization on either side. The scan itself is the
-    vectorized matcher engine (``fastscan``, r4): columnar match arrays with
-    integer term ranks, per-turn reduce as one int-key ``np.unique``, and the
-    list column built from offsets via ``pa.ListArray.from_arrays`` — zero
-    per-row/per-match Python. Interleaved A/B vs the regex engine on the
-    1.7M-turn bench corpus at local[32]: scan stage 1.6x, whole pipeline
-    1.4-1.5x (kg_pipeline 7.3 s -> 4.8 s); the regex path remains as the
-    non-ASCII / non-token-dictionary fallback."""
-    canon = canon or {}
-
-    def scan(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        matcher = get_matcher(onto, degradation_level)
-        get = canon.get
-        for rb in batches:
-            schema = rb.schema
-            texts = rb.column(schema.get_field_index("text")).to_pylist()
-            cols = matcher.find_batch_columnar(
-                texts, best_only=True, need_surface=False, as_ranks=True
-            )
-            bf = None if cols is not None else matcher.find_batch(texts, best_only=True)
-            if max_candidates_per_turn is not None and texts:
-                n_found = (
-                    np.bincount(cols[0], minlength=len(texts))
-                    if cols is not None
-                    else np.fromiter(map(len, bf), dtype=np.int64, count=len(bf))
-                )
-                worst = int(n_found.argmax())
-                if n_found[worst] > max_candidates_per_turn:
-                    raise ExtractionError(
-                        str(rb.column(schema.get_field_index("conv_id"))[worst].as_py()),
-                        rb.column(schema.get_field_index("turn_idx"))[worst].as_py(),
-                        int(n_found[worst]),
-                        max_candidates_per_turn,
-                    )
-            if cols is not None:
-                # fully vectorized per-turn reduce: the canon map is applied
-                # ONCE to the matcher's term-id table (cached rank->canon-rank
-                # int table), then the sorted-distinct-per-row set is one
-                # np.unique over (row, canon_rank) int keys and the list
-                # column is built from offsets — zero per-row Python and no
-                # object-string sorting in the batch loop
-                row, _st, _en, _surf, ranks, _sc = cols
-                if row.size == 0:
-                    continue
-                cr_table, cu = matcher.canon_rank_table(canon)
-                key = row.astype(np.int64) * len(cu) + cr_table[ranks]
-                ukey = np.unique(key)
-                rows2 = ukey // len(cu)
-                cr2 = ukey % len(cu)
-                urows, counts = np.unique(rows2, return_counts=True)
-                offsets = np.zeros(urows.shape[0] + 1, dtype=np.int32)
-                np.cumsum(counts, out=offsets[1:])
-                terms_arr = pa.ListArray.from_arrays(
-                    pa.array(offsets), pa.array(cu[cr2], type=pa.string())
-                )
-                idx = pa.array(urows, type=pa.int32())
-                yield pa.record_batch(
-                    [
-                        rb.column(schema.get_field_index("conv_id")).take(idx),
-                        rb.column(schema.get_field_index("turn_idx")).take(idx),
-                        terms_arr,
-                    ],
-                    names=["conv_id", "turn_idx", "terms"],
-                )
-                continue
-            keep_idx: list[int] = []
-            terms_col: list[list[str]] = []
-            for i, found in enumerate(bf):
-                if not found:
-                    continue
-                keep_idx.append(i)
-                terms_col.append(sorted({get(t[3], t[3]) for t in found}))
-            if not keep_idx:
-                continue
-            idx = pa.array(keep_idx, type=pa.int32())
-            yield pa.record_batch(
-                [
-                    rb.column(schema.get_field_index("conv_id")).take(idx),
-                    rb.column(schema.get_field_index("turn_idx")).take(idx),
-                    pa.array(terms_col, type=pa.list_(pa.string())),
-                ],
-                names=["conv_id", "turn_idx", "terms"],
-            )
-
-    return transcripts.select("conv_id", "turn_idx", "text").mapInArrow(
-        scan, schema="conv_id string, turn_idx int, terms array<string>"
+    fast path and on the regex path alike."""
+    return _scan(
+        transcripts, onto, True, canon or {}, degradation_level, max_candidates_per_turn
     )
 
 
-def extract_turn_ranks(
+def _scan(
     transcripts: DataFrame,
     onto: Ontology,
-    canon: dict[str, str] | None = None,
-    degradation_level: int = 0,
+    per_turn: bool,
+    canon: dict[str, str],
+    degradation_level: int,
+    max_candidates_per_turn: int | None,
 ) -> DataFrame:
-    """Vocab-int variant of :func:`extract_turn_terms`: (conv_id, turn_idx,
-    ranks array<int>) — per-turn sorted distinct CANONICAL term ids as
-    integer ranks into the matcher's sorted canonical term table
-    (``canon_rank_table``'s ``cu``; rank order == lexicographic string
-    order, so downstream a < b pair semantics are identical).
+    """The extraction kernel: one ``mapInArrow`` stage over (conv_id,
+    turn_idx, text), spread first by ``ensure_scan_parallelism`` when the
+    input has fewer partitions than cores. It emits ``MENTIONS_SCHEMA`` rows,
+    or with ``per_turn`` ``TURN_TERMS_SCHEMA`` rows (``canon`` applied).
 
-    This is the skinny-shuffle path for edge materialization (ROADMAP #1):
-    the pair-expansion distinct then shuffles two int32s per row instead of
-    two CURIE strings, and the final unmap back to strings is a pure
-    ``element_at`` projection against the literal ``cu`` array — no joins.
-    Use :func:`kg_obo_spark.operators.materialize.edges_from_per_turn_ranks`
-    to consume it; get ``cu`` driver-side via
-    ``get_matcher(onto, level).canon_rank_table(canon)[1]``."""
-    canon = canon or {}
+    Per Arrow batch: texts leave the RecordBatch via ``to_pylist`` (C) and
+    key columns go back via Arrow ``take`` — no pandas on either side. The
+    vectorized matcher engine (``fastscan``, r4) returns columnar match
+    arrays; for a batch it refuses (non-ASCII text, a dictionary outside its
+    token model) the regex engine scans it and its per-row lists become the
+    same columns. The per-turn candidate budget is then checked on those
+    columns, whichever engine made them.
 
-    def scan(batches):
-        import numpy as np
-        import pyarrow as pa
+    The per-turn reduce runs on int arrays: the canon map is applied ONCE to
+    the matcher's term-id table (cached rank -> canonical-rank table), the
+    sorted distinct set of every row is one ``np.unique`` over (row,
+    canonical rank) keys, and the list column is built from offsets via
+    ``pa.ListArray.from_arrays`` — on the fast path, zero per-row/per-match
+    Python. Interleaved
+    A/B vs the regex engine on the 1.7M-turn bench corpus at local[32]: scan
+    stage 1.6x, whole pipeline 1.4-1.5x (kg_pipeline 7.3 s -> 4.8 s)."""
+    schema = TURN_TERMS_SCHEMA if per_turn else MENTIONS_SCHEMA
+    names = [c.split(" ")[0] for c in schema.split(", ")]
 
+    def kernel(batches):
         matcher = get_matcher(onto, degradation_level)
         for rb in batches:
-            schema = rb.schema
-            texts = rb.column(schema.get_field_index("text")).to_pylist()
+            conv, turn, text = rb.columns
+            texts = text.to_pylist()
             cols = matcher.find_batch_columnar(
-                texts, best_only=True, need_surface=False, as_ranks=True
+                texts, best_only=True, need_surface=not per_turn, as_ranks=per_turn
             )
-            cr_table, cu = matcher.canon_rank_table(canon)
-            if cols is not None:
-                row, _st, _en, _surf, ranks, _sc = cols
-                if row.size == 0:
-                    continue
-                key = row.astype(np.int64) * len(cu) + cr_table[ranks]
-                ukey = np.unique(key)
-                rows2 = ukey // len(cu)
-                cr2 = (ukey % len(cu)).astype(np.int32)
-                urows, counts = np.unique(rows2, return_counts=True)
+            if cols is None:  # regex engine; a None text has no matches
+                cols = _columns(
+                    matcher.find_batch_regex(texts),
+                    matcher.term_ranks if per_turn else list,
+                )
+            row = cols[0]
+            if row.size == 0:
+                continue
+            if max_candidates_per_turn is not None:
+                n_found = np.bincount(row)
+                worst = int(n_found.argmax())
+                if n_found[worst] > max_candidates_per_turn:
+                    raise ExtractionError(
+                        str(conv[worst].as_py()),
+                        turn[worst].as_py(),
+                        int(n_found[worst]),
+                        max_candidates_per_turn,
+                    )
+            if per_turn:
+                cr_table, cu = matcher.canon_rank_table(canon)
+                key = np.unique(row.astype(np.int64) * len(cu) + cr_table[cols[4]])
+                urows, counts = np.unique(key // len(cu), return_counts=True)
                 offsets = np.zeros(urows.shape[0] + 1, dtype=np.int32)
                 np.cumsum(counts, out=offsets[1:])
-                ranks_arr = pa.ListArray.from_arrays(
-                    pa.array(offsets), pa.array(cr2, type=pa.int32())
-                )
                 idx = pa.array(urows, type=pa.int32())
-                yield pa.record_batch(
-                    [
-                        rb.column(schema.get_field_index("conv_id")).take(idx),
-                        rb.column(schema.get_field_index("turn_idx")).take(idx),
-                        ranks_arr,
-                    ],
-                    names=["conv_id", "turn_idx", "ranks"],
-                )
-                continue
-            # regex fallback: map extracted term strings to canonical ranks
-            pos = {s: i for i, s in enumerate(cu)}
-            get = canon.get
-            bf = matcher.find_batch(texts, best_only=True)
-            keep_idx: list[int] = []
-            ranks_col: list[list[int]] = []
-            for i, found in enumerate(bf):
-                if not found:
-                    continue
-                keep_idx.append(i)
-                ranks_col.append(sorted({pos[get(t[3], t[3])] for t in found}))
-            if not keep_idx:
-                continue
-            idx = pa.array(keep_idx, type=pa.int32())
-            yield pa.record_batch(
-                [
-                    rb.column(schema.get_field_index("conv_id")).take(idx),
-                    rb.column(schema.get_field_index("turn_idx")).take(idx),
-                    pa.array(ranks_col, type=pa.list_(pa.int32())),
-                ],
-                names=["conv_id", "turn_idx", "ranks"],
-            )
+                out = [
+                    pa.ListArray.from_arrays(
+                        pa.array(offsets), pa.array(cu[key % len(cu)], type=pa.string())
+                    )
+                ]
+            else:
+                _row, start, end, surface, term_id, score = cols
+                idx = pa.array(row, type=pa.int32())
+                out = [
+                    pa.array(start, type=pa.int32()),
+                    pa.array(end, type=pa.int32()),
+                    pa.array(surface, type=pa.string()),
+                    pa.array(term_id, type=pa.string()),
+                    pa.array(score, type=pa.float64()),
+                ]
+            yield pa.record_batch([conv.take(idx), turn.take(idx), *out], names=names)
 
-    return transcripts.select("conv_id", "turn_idx", "text").mapInArrow(
-        scan, schema="conv_id string, turn_idx int, ranks array<int>"
+    # only the columns the scan needs — lets Catalyst prune the parquet read;
+    # turn_idx is passed through as both schemas' int
+    scan_input = transcripts.select(
+        "conv_id", F.col("turn_idx").cast("int").alias("turn_idx"), "text"
+    )
+    return ensure_scan_parallelism(scan_input).mapInArrow(kernel, schema=schema)
+
+
+def _columns(found: list[list[tuple]], terms) -> tuple:
+    """The regex engine's per-row match lists as the columns
+    ``find_batch_columnar`` returns; ``terms`` makes the term column from
+    the term-id strings."""
+    flat = [m for f in found for m in f]
+    row = np.repeat(np.arange(len(found)), [len(f) for f in found])
+    start, end, surface, term_id, score = zip(*flat) if flat else ((),) * 5
+    return (
+        row,
+        np.array(start, dtype=np.int64),
+        np.array(end, dtype=np.int64),
+        surface,
+        terms(term_id),
+        np.array(score, dtype=np.float64),
     )
 
 
@@ -418,19 +275,3 @@ def conversation_features(transcripts: DataFrame, mentions: DataFrame) -> DataFr
         ),
     )
 
-
-def link_best(mentions: DataFrame) -> DataFrame:
-    """1-best entity linking: per (conv_id, turn_idx, start, end) keep the highest
-    score, ties broken by term_id asc (deterministic).
-
-    Expressed as a window rank so Catalyst plans a single shuffle on the span
-    key; no Python in the loop.
-    """
-    w = Window.partitionBy("conv_id", "turn_idx", "start", "end").orderBy(
-        F.col("score").desc(), F.col("term_id").asc()
-    )
-    return (
-        mentions.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )

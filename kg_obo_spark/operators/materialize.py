@@ -192,10 +192,9 @@ def co_mention_batch(
     ``degradation_level`` and ``max_candidates_per_turn`` are the repair
     ladder's knobs (see ``extract_turn_terms``)."""
     from kg_obo_spark.operators.extract import extract_turn_terms
-    from kg_obo_spark.partitioning import ensure_scan_parallelism
 
     pt = extract_turn_terms(
-        ensure_scan_parallelism(transcripts.select("conv_id", "turn_idx", "text")),
+        transcripts,
         onto,
         canon,
         degradation_level=degradation_level,
@@ -293,161 +292,14 @@ def edges_from_per_turn(per_turn: DataFrame, onto: Ontology) -> DataFrame:
     return co.unionByName(isa_from_mentioned(mentioned, onto))
 
 
-def co_edges_from_per_turn_ranks(
-    per_turn_ranks: DataFrame, cu, onto: Ontology
-) -> DataFrame:
-    """Co-mention-only core of the vocab-int edge path: int32 pair expansion
-    + distinct on (a, b) ranks + ``element_at`` literal unmap + constant KGX
-    columns. Shared by :func:`edges_from_per_turn_ranks` (adds is_a) and the
-    pipeline's per-unit edge stage (is_a is finalize-global there)."""
-    cu_list = [str(s) for s in cu]
-    lit_cu = F.lit(cu_list)
-    first = per_turn_ranks.filter(F.size("ranks") >= 2).select(
-        F.posexplode("ranks").alias("_i", "a"),
-        F.col("ranks"),
-    )
-    co_pairs = (
-        first.select(
-            "a",
-            F.explode(
-                F.slice(F.col("ranks"), F.col("_i") + 2, F.size("ranks"))
-            ).alias("b"),
-        )
-        .select("a", "b")
-        .distinct()
-    )
-    return co_pairs.select(
-        F.element_at(lit_cu, F.col("a") + 1).alias("subject"),
-        F.lit(CO_MENTION_PREDICATE).alias("predicate"),
-        F.element_at(lit_cu, F.col("b") + 1).alias("object"),
-        F.lit(CO_MENTION_RELATION).alias("relation"),
-        F.lit(onto.knowledge_source).alias("knowledge_source"),
-    )
-
-
-def edges_from_per_turn_ranks(
-    per_turn_ranks: DataFrame, cu, onto: Ontology
-) -> DataFrame:
-    """Vocab-int edge materialization (ROADMAP #1): the same KGX edge table
-    as :func:`edges_from_per_turn`, but the pair-expansion distinct shuffles
-    integer RANKS (two int32s per row) instead of CURIE strings, and the
-    unmap back to strings is a pure ``element_at`` projection against the
-    literal sorted canonical term table ``cu`` — no unmap joins (the r3
-    experiment's cost center). Because ``cu`` is lexicographically sorted,
-    rank order == string order and the a < b pair set is identical to the
-    string path (pinned by tests/test_materialize_ranks.py).
-
-    ``per_turn_ranks`` is :func:`~kg_obo_spark.operators.extract.
-    extract_turn_ranks` output; ``cu`` is the matcher's
-    ``canon_rank_table(canon)[1]`` (driver-side)."""
-    co = co_edges_from_per_turn_ranks(per_turn_ranks, cu, onto)
-    cu_list = [str(s) for s in cu]
-    mentioned = (
-        per_turn_ranks.select(F.explode("ranks").alias("r"))
-        .distinct()
-        .select(F.element_at(F.lit(cu_list), F.col("r") + 1).alias("id"))
-    )
-    return co.unionByName(isa_from_mentioned(mentioned, onto))
-
-
 def co_edges_from_mention_ranks(
     mentions: DataFrame, cu, onto: Ontology
 ) -> DataFrame:
-    """Vocab-int co-mention edges from canonical mention rows (ROADMAP #13).
-    No library code calls it since ``run_pipeline`` commits per-batch
-    registry rows (:func:`co_mention_batch`) instead of mentions; it stays
-    with the rest of the rank family and its equality test.
-
-    Mention rows carry string CURIEs, so this path re-ranks them on the way
-    into the pair shuffle: a broadcast join against the tiny
-    (canonical id, rank) table (bounded by dictionary size), then the
-    (conv, turn) reduce and pair-expansion distinct both shuffle int32s
-    instead of CURIE strings. ``cu`` must cover every canonical term_id in
-    ``mentions`` (the matcher's full-level ``canon_rank_table(canon)[1]`` is
-    a superset of any degraded level's ids); the inner join is then
-    row-preserving. Output is identical to
-    ``build_edges(mentions, onto, include_isa=False)`` — pinned by
-    tests/test_materialize_ranks.py."""
-    spark = mentions.sparkSession
-    rt = local_frame(
-        spark,
-        [(str(s), i) for i, s in enumerate(cu)], "id string, r int"
-    )
-    per_turn = (
-        mentions.join(F.broadcast(rt), mentions["term_id"] == rt["id"])
-        .groupBy("conv_id", "turn_idx")
-        .agg(F.array_sort(F.collect_set("r")).alias("ranks"))
-    )
-    return co_edges_from_per_turn_ranks(per_turn, cu, onto)
-
-
-# Edge-stage crossover for the vocab-int pair shuffle, in TURN rows
-# (BENCH/VOCAB_INT_AB.md: string CURIEs win at 200k convs, int ranks win at
-# 600k+; the bench corpus runs ~9 turns/conversation, so the conservative
-# switch point ~500k convs is ~4.5M turns). Below this the distinct pair
-# OUTPUT (bounded by dictionary density, not corpus size) dominates pair
-# volume and the element_at unmap costs more than the skinny shuffle saves.
-VOCAB_INT_CROSSOVER_TURNS = 4_500_000
-
-
-def estimated_turn_count(transcripts: DataFrame, avg_row_bytes: int = 200) -> int:
-    """Scan-free row estimate from Catalyst plan statistics.
-
-    Uses the optimized plan's row count when the source provides one, else
-    sizeInBytes / avg_row_bytes (for a parquet scan sizeInBytes is the
-    on-disk compressed size, so avg_row_bytes is COMPRESSED bytes per turn —
-    the 200-byte default overestimates typical transcript rows, biasing the
-    estimate LOW, i.e. toward the string path, which is the safe direction:
-    the int-rank path only wins clearly above the crossover)."""
-    stats = transcripts._jdf.queryExecution().optimizedPlan().stats()
-    rc = stats.rowCount()
-    if rc.isDefined():
-        return int(str(rc.get()))
-    return int(str(stats.sizeInBytes())) // max(1, avg_row_bytes)
-
-
-def edges_from_transcripts(
-    transcripts: DataFrame,
-    onto: Ontology,
-    canon: dict[str, str] | None = None,
-    *,
-    n_turns: int | None = None,
-    crossover_turns: int = VOCAB_INT_CROSSOVER_TURNS,
-    degradation_level: int = 0,
-) -> DataFrame:
-    """Auto-switching KGX edge materialization (ROADMAP #10).
-
-    Picks the pair-shuffle representation from the corpus size instead of a
-    caller flag: below ``crossover_turns`` the string-CURIE path
-    (:func:`edges_from_per_turn`) wins because the distinct edge output is a
-    large fraction of pair volume; above it the vocab-int path
-    (:func:`edges_from_per_turn_ranks` — int32 pair shuffle + element_at
-    literal unmap) wins 1.7x on the edge stage (measured at 2M convs,
-    BENCH/VOCAB_INT_AB.md). Both paths produce the identical distinct triple
-    set (tests/test_materialize_ranks.py).
-
-    ``n_turns``: pass the known turn count when the caller has it (e.g. from
-    a TableIO snapshot's footer row counts — metadata-only); when None it is
-    estimated scan-free from plan statistics (:func:`estimated_turn_count`),
-    so the dispatch itself never adds a job at 100 TB."""
-    from kg_obo_spark.dictionary import get_matcher
-    from kg_obo_spark.operators.extract import (
-        extract_turn_ranks,
-        extract_turn_terms,
-    )
-
-    if n_turns is None:
-        n_turns = estimated_turn_count(transcripts)
-    if n_turns >= crossover_turns:
-        cu = get_matcher(onto, degradation_level).canon_rank_table(canon or {})[1]
-        pt = extract_turn_ranks(
-            transcripts, onto, canon, degradation_level=degradation_level
-        )
-        return edges_from_per_turn_ranks(pt, cu, onto)
-    pt = extract_turn_terms(
-        transcripts, onto, canon, degradation_level=degradation_level
-    )
-    return edges_from_per_turn(pt, onto)
+    """Co-mention edges of canonical mention rows:
+    ``build_edges(mentions, onto, include_isa=False)``; ``cu`` is unused.
+    No library code calls it; the name stays bound because perfbench's
+    tracer wraps ``plans.pipeline.co_edges_from_mention_ranks``."""
+    return build_edges(mentions, onto, include_isa=False)
 
 
 def build_isa_edges(mentions: DataFrame, onto: Ontology) -> DataFrame:

@@ -34,7 +34,6 @@ import re
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from kg_obo_spark.session import arrow_rows, local_frame
 from kg_obo_spark.sources.tableio import Table, parquet_file_rows
@@ -65,15 +64,14 @@ class TrackingStore:
 
     def transformed_exists(self, spark: SparkSession, source: str, version: str) -> bool:
         """True iff (source, version) is the current version or archived —
-        transform.py:411-452 semantics."""
-        t = self.read_tracking(spark).filter(F.col("source") == source)
-        row = t.select(
-            F.max((F.col("current_version") == version).cast("int")).alias("cur"),
-            F.max(
-                F.exists("archive", lambda a: a["version"] == F.lit(version)).cast("int")
-            ).alias("arch"),
-        ).first()
-        return bool(row and ((row["cur"] or 0) + (row["arch"] or 0) > 0))
+        transform.py:411-452 semantics; a driver-side read, no Spark job."""
+        rows = self.tracking.read_arrow().to_pylist() if self.tracking.exists() else []
+        return any(
+            r["current_version"] == version
+            or any(a["version"] == version for a in r["archive"] or ())
+            for r in rows
+            if r["source"] == source
+        )
 
     def track_version(
         self, spark: SparkSession, source: str, iri: str, version: str

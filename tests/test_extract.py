@@ -1,13 +1,11 @@
 """Mention detection: matcher spec cases + the per-turn text-equality invariant
 (offsets index into the ORIGINAL text; text is never mutated)."""
 
-from datetime import datetime
-
 from pyspark.sql import functions as F
 
 from kg_obo_spark.datagen import build_ontology, generate_transcripts
 from kg_obo_spark.dictionary import build_matcher
-from kg_obo_spark.operators.extract import extract_mentions, link_best
+from kg_obo_spark.operators.extract import extract_mentions
 
 
 def _onto_with(terms):
@@ -83,16 +81,34 @@ def test_ambiguous_surface_best_only_deterministic():
     assert {h[3] for h in all_hits} == {"CHEBI:0000003", "GO:0000002"}
 
 
+# accented and term-free: a turn carrying it sends its Arrow batch to the
+# regex engine, and the matches stay those of the rest of the turn
+ACCENTED = " Déjà vu au café, à bientôt."
+
+
+def _with_accents(tr, onto):
+    """``tr`` with ``ACCENTED`` appended to every fifth turn."""
+    m = build_matcher(onto)
+    assert m.find(ACCENTED) == [] and m.find_batch_columnar(["x" + ACCENTED]) is None
+    return tr.withColumn(
+        "text",
+        F.when(F.col("turn_idx") % 5 == 0, F.concat("text", F.lit(ACCENTED))).otherwise(
+            F.col("text")
+        ),
+    )
+
+
 def test_offsets_index_original_text(spark, onto):
-    tr = generate_transcripts(spark, n_convs=60, seed=5, ontology=onto)
-    mentions = extract_mentions(tr, onto)
-    joined = mentions.join(tr, ["conv_id", "turn_idx"]).select(
-        "text", "start", "end", "surface"
-    )
-    bad = joined.filter(
-        F.expr("substring(text, start + 1, end - start)") != F.col("surface")
-    )
-    assert bad.count() == 0
+    """On both engines: an ASCII corpus (fast path) and the same corpus with
+    accented turns (regex path) — offsets index the original string."""
+    ascii_tr = generate_transcripts(spark, n_convs=60, seed=5, ontology=onto)
+    for tr in (ascii_tr, _with_accents(ascii_tr, onto)):
+        mentions = extract_mentions(tr, onto)
+        spans = F.expr("substring(text, start + 1, end - start)")
+        n, n_bad = mentions.join(tr, ["conv_id", "turn_idx"]).select(
+            F.count("*"), F.count_if(spans != F.col("surface"))
+        ).first()
+        assert n > 0 and n_bad == 0
 
 
 def test_text_never_mutated(spark, onto):
@@ -101,20 +117,6 @@ def test_text_never_mutated(spark, onto):
     extract_mentions(tr, onto).count()
     after = tr.select(F.bit_xor(F.xxhash64("conv_id", "turn_idx", "text")).alias("h")).first()["h"]
     assert before == after
-
-
-def test_link_best_window(spark):
-    onto = _onto_with(
-        [_term("GO:0000002", "kinase"), _term("CHEBI:0000003", "kinase")]
-    )
-    tr = spark.createDataFrame(
-        [("c1", 0, "u", "a kinase here", "", datetime(2026, 1, 1))],
-        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
-    )
-    all_m = extract_mentions(tr, onto, all_candidates=True)
-    assert all_m.count() == 2
-    best = link_best(all_m)
-    assert [r["term_id"] for r in best.collect()] == ["CHEBI:0000003"]
 
 
 def test_matcher_degradation_levels(onto):
@@ -146,29 +148,31 @@ def test_matcher_degradation_levels(onto):
 def test_extract_turn_terms_equals_shuffled_path(spark, onto):
     """The fused map-only scan (extract+canonicalize+per-turn reduce in-task)
     produces EXACTLY the frame of the shuffled path
-    per_turn_terms(canonical_mentions(extract_mentions(...)))."""
+    per_turn_terms(canonical_mentions(extract_mentions(...))), on the fast
+    path (ASCII corpus) and on the regex path (accented turns)."""
     from kg_obo_spark.datagen import generate_transcripts
     from kg_obo_spark.operators.canonicalize import canonical_map
     from kg_obo_spark.operators.extract import extract_turn_terms
     from kg_obo_spark.operators.materialize import canonical_mentions, per_turn_terms
 
-    tr = generate_transcripts(spark, n_convs=60, seed=31, ontology=onto)
+    ascii_tr = generate_transcripts(spark, n_convs=60, seed=31, ontology=onto)
     eq = spark.createDataFrame(onto.xrefs or [("__none__", "__none__")], "a string, b string")
     terms_df = spark.createDataFrame([(t["id"],) for t in onto.terms], "id string")
     cmap = canonical_map(terms_df, eq)
     cdict = {r["term_id"]: r["canonical_id"] for r in cmap.collect()}
 
-    shuffled = {
-        (r["conv_id"], r["turn_idx"], tuple(r["terms"]))
-        for r in per_turn_terms(
-            canonical_mentions(extract_mentions(tr, onto), cmap)
-        ).collect()
-    }
-    fused = {
-        (r["conv_id"], r["turn_idx"], tuple(r["terms"]))
-        for r in extract_turn_terms(tr, onto, cdict).collect()
-    }
-    assert fused == shuffled and fused
+    for tr in (ascii_tr, _with_accents(ascii_tr, onto)):
+        shuffled = {
+            (r["conv_id"], r["turn_idx"], tuple(r["terms"]))
+            for r in per_turn_terms(
+                canonical_mentions(extract_mentions(tr, onto), cmap)
+            ).collect()
+        }
+        fused = {
+            (r["conv_id"], r["turn_idx"], tuple(r["terms"]))
+            for r in extract_turn_terms(tr, onto, cdict).collect()
+        }
+        assert fused == shuffled and fused
 
 
 def test_extract_turn_terms_candidate_budget_on_both_paths(spark, onto):

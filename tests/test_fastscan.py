@@ -23,15 +23,6 @@ def texts(onto):
     return pdf["text"].tolist()
 
 
-def _regex_batch(m, texts, best_only=True):
-    saved = m.find_batch_columnar
-    m.find_batch_columnar = lambda *a, **k: None
-    try:
-        return m.find_batch(texts, best_only=best_only)
-    finally:
-        m.find_batch_columnar = saved
-
-
 @pytest.mark.parametrize("level", [0, 1, 2, 3])
 @pytest.mark.parametrize("best_only", [True, False])
 def test_vector_equals_per_row_find(onto, texts, level, best_only):
@@ -42,7 +33,7 @@ def test_vector_equals_per_row_find(onto, texts, level, best_only):
 
 def test_vector_equals_regex_batch(onto, texts):
     m = build_matcher(onto, 0)
-    assert m.find_batch(texts) == _regex_batch(m, texts)
+    assert m.find_batch(texts) == m.find_batch_regex(texts)
 
 
 def test_all_id_shapes_and_boundaries(onto):
@@ -97,7 +88,7 @@ def test_owl_form_adjacent_and_long_names(onto):
         f"OBO:bfo.owl#{pfx}_{num} case-rejected",
     ]
     got = m.find_batch(rows, best_only=False)
-    want = _regex_batch(m, rows, best_only=False)
+    want = m.find_batch_regex(rows, best_only=False)
     assert got == want
     assert len(got[0]) == 2 and all(c[3] == tid for c in got[0])
     assert len(got[1]) == 3
@@ -128,7 +119,7 @@ def test_obo_as_known_prefix_mirrors_regex_rule():
         "see OBO:OBO_0000009 here",  # underscore form resolves regardless
     ]
     got = m.find_batch(rows, best_only=False)
-    want = _regex_batch(m, rows, best_only=False)
+    want = m.find_batch_regex(rows, best_only=False)
     assert got == want
     assert got[0] and got[0][0][3] == "OBO:0000009" and got[0][0][4] == 0.97
     assert got[1] and got[1][0][4] == 0.97

@@ -652,7 +652,8 @@ def test_plain_snapshot_read_carries_schema_and_runs_no_job(spark, tmp_path):
 def test_driver_bookkeeping_runs_no_spark_job(spark, tmp_path):
     """Lineage and tracking are written and read on the driver: a batch's
     unit-done commit, a lineage commit, a first tracked version, a rotation
-    and the pending-unit lookup on a root with lineage start no Spark job."""
+    the pending-unit lookup on a root with lineage and the current-or-archived
+    version check start no Spark job."""
     from kg_obo_spark.plans.tracking import stage_rows
     from tests.conftest import count_jobs
 
@@ -663,8 +664,10 @@ def test_driver_bookkeeping_runs_no_spark_job(spark, tmp_path):
         store.track_version(spark, "bfo", "iri-v1", "v1")
         store.track_version(spark, "bfo", "iri-v2", "v2")
         pending = store.pending_units(["0", "1", "2"])
+        exists = [store.transformed_exists(spark, "bfo", v) for v in ("v1", "v2", "v3")]
     assert jobs["n"] == 0, jobs
     assert pending == ["2"]
+    assert exists == [True, True, False]
     assert len(store.lineage.snapshots()) == 2
     row = store.read_tracking(spark).first()
     assert (row["current_version"], [tuple(a) for a in row["archive"]]) == (
