@@ -354,10 +354,9 @@ def q_bm25_topk_queries(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The statistic BPE tokenizer training is built from: adjacent
     character-pair counts weighted by corpus word frequency (merge round 0
-    of learn_bpe — the full learner is a driver loop of exactly this agg
-    plus a map-only merge stage, pytest-pinned vs a sequential replay in
-    tests/test_bpe.py). ONE corpus exchange (hash(word), map-side
-    combined); everything after runs on the distinct-word table."""
+    of a BPE learner, which repeats this agg once per merge). ONE corpus
+    exchange (hash(word), map-side combined); everything after runs on the
+    distinct-word table."""
     from kg_obo_spark.functions.bpe import (
         char_symbols,
         pair_counts,

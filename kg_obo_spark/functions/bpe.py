@@ -1,28 +1,16 @@
-"""Distributed BPE (byte-pair-encoding) merge learning — tokenizer
-INDUCTION at corpus scale, the training half of the tokenizer seam.
+"""BPE (byte-pair-encoding) pair statistics at corpus scale: the
+statistic a BPE tokenizer's merge rules are learned from.
 
-:mod:`~kg_obo_spark.functions.tokenizer` applies a FIXED subword vocab;
-real pipelines first learn that vocab from the corpus. Classic BPE
-(Sennrich et al. 2016, the GPT-2 recipe): start from characters, and
-``num_merges`` times (a) count adjacent symbol pairs over the corpus,
-(b) merge the most frequent pair everywhere, recording it as a rule.
-The learned rule list IS the tokenizer — :class:`LearnedBPE` applies the
-rules in rank order and plugs into every ``tokenizer=`` seam
-(``pack_sequences``, ``chunk_documents``, SFT budgets).
-
-100 TB shape — the standard trick is that BPE statistics only need WORD
-FREQUENCIES, never positions:
+Classic BPE (Sennrich et al. 2016, the GPT-2 recipe) starts from
+characters and repeatedly merges the most frequent adjacent symbol pair.
+The statistic needs only WORD FREQUENCIES, never positions:
 
 - ``word_frequencies`` collapses the corpus once (ONE exchange, map-side
   combined). Everything after runs on the distinct-word table — bounded by
   vocabulary (~1e7-1e8 rows for a web corpus), orders of magnitude smaller
   than the corpus.
-- Each merge round is one pair-count aggregation over that table (map-side
-  combined; the argmax is a TakeOrderedAndProject, no full sort) plus one
-  map-only Arrow merge stage. The corpus is never rescanned.
-- Ties break deterministically ((count DESC, a ASC, b ASC)) so the learned
-  rules are independent of partitioning and reproducible run-to-run — the
-  property that lets the pure-Python replay in the tests pin the result.
+- ``pair_counts`` is one pair-count aggregation over that table (map-side
+  combined); the corpus is never rescanned.
 
 Reference analog: none — kg-obo has no tokenizer; this extends the
 engine's LLM-training-data family (SURVEY §2.6 text functions).
@@ -30,21 +18,15 @@ engine's LLM-training-data family (SURVEY §2.6 text functions).
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kg_obo_spark.functions.text import tokens
-from kg_obo_spark.functions.tokenizer import GreedyWordpiece
 
 __all__ = [
     "word_frequencies",
     "char_symbols",
     "pair_counts",
-    "learn_bpe",
-    "LearnedBPE",
 ]
 
 
@@ -83,100 +65,3 @@ def pair_counts(syms_df: DataFrame) -> DataFrame:
     return pairs.groupBy(
         F.col("p.a").alias("a"), F.col("p.b").alias("b")
     ).agg(F.sum("freq").alias("n"))
-
-
-def _merge_pair_in_word(syms: list[str], a: str, b: str) -> list[str]:
-    """Left-to-right non-overlapping replacement of (a, b) -> a+b."""
-    out: list[str] = []
-    i, n = 0, len(syms)
-    while i < n:
-        if i < n - 1 and syms[i] == a and syms[i + 1] == b:
-            out.append(a + b)
-            i += 2
-        else:
-            out.append(syms[i])
-            i += 1
-    return out
-
-
-def _apply_merge(syms_df: DataFrame, a: str, b: str) -> DataFrame:
-    """Map-only Arrow stage applying one merge rule to every word's symbol
-    sequence. Per-word sequential left-to-right semantics (the part SQL
-    can't express) over the SMALL distinct-word table — never the corpus."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["syms"] = [
-                _merge_pair_in_word(list(s), a, b) for s in pdf["syms"]
-            ]
-            yield pdf
-
-    return syms_df.mapInPandas(
-        gen, schema="word string, freq long, syms array<string>"
-    )
-
-
-def learn_bpe(
-    df: DataFrame,
-    text_col: str = "text",
-    num_merges: int = 8,
-    min_freq: int = 2,
-) -> list[tuple[str, str]]:
-    """Learn ``num_merges`` BPE merge rules from a corpus; returns the
-    ranked rule list (feed it to :class:`LearnedBPE`).
-
-    Stops early when the best remaining pair's weighted count drops below
-    ``min_freq`` (a merge seen once generalizes to nothing). The returned
-    list is deterministic for a given corpus: integer counts plus the
-    (count DESC, a, b) tie-break make every round's argmax unique.
-    """
-    syms = char_symbols(word_frequencies(df, text_col)).localCheckpoint()
-    merges: list[tuple[str, str]] = []
-    for _ in range(num_merges):
-        top = (
-            pair_counts(syms)
-            .orderBy(F.desc("n"), "a", "b")
-            .limit(1)
-            .collect()
-        )
-        if not top or top[0]["n"] < min_freq:
-            break
-        a, b = top[0]["a"], top[0]["b"]
-        merges.append((a, b))
-        # eager checkpoint: next round's pair_counts is the only consumer,
-        # but the loop would otherwise stack one Arrow stage per round
-        syms = _apply_merge(syms, a, b).localCheckpoint()
-    return merges
-
-
-class LearnedBPE(GreedyWordpiece):
-    """Tokenizer over learned BPE rules — GPT-2-style application: while
-    any adjacent pair has a rule, merge all occurrences of the LOWEST-RANK
-    such pair (left-to-right, non-overlapping). Exposes the same surface
-    as :class:`GreedyWordpiece` (``encode_word`` / ``encode`` /
-    ``n_tokens`` / ``counts_frame`` / ``pieces_frame`` — the frame stages
-    are inherited; they only call ``encode_word``), so it plugs into every
-    ``tokenizer=`` seam."""
-
-    def __init__(self, merges: list[tuple[str, str]]):
-        self.merges = tuple((a, b) for a, b in merges)
-        self.ranks = {p: i for i, p in enumerate(self.merges)}
-        self._memo: dict[str, tuple[str, ...]] = {}
-
-    def encode_word(self, word: str) -> tuple[str, ...]:
-        got = self._memo.get(word)
-        if got is None:
-            syms = list(word)
-            while len(syms) > 1:
-                best_rank = None
-                for i in range(len(syms) - 1):
-                    r = self.ranks.get((syms[i], syms[i + 1]))
-                    if r is not None and (best_rank is None or r < best_rank):
-                        best_rank = r
-                if best_rank is None:
-                    break
-                a, b = self.merges[best_rank]
-                syms = _merge_pair_in_word(syms, a, b)
-            got = self._memo[word] = tuple(syms)
-        return got

@@ -59,22 +59,6 @@ def estimate(sketch: Column | str) -> Column:
     return F.hll_sketch_estimate(sketch).alias("estimate")
 
 
-def partition_sketch_lineage(
-    df: DataFrame, value_col: str, lg_k: int = DEFAULT_LG_K
-) -> DataFrame:
-    """(partition_id, rows, sketch): per-partition sketch rows for the lineage
-    table — commit these with each stage snapshot and any later job can answer
-    'how many distinct X so far' by merging, without touching the data."""
-    return (
-        df.withColumn("partition_id", F.spark_partition_id())
-        .groupBy("partition_id")
-        .agg(
-            F.count("*").alias("rows"),
-            F.hll_sketch_agg(value_col, F.lit(lg_k)).alias("sketch"),
-        )
-    )
-
-
 # ------------------------------------------------------- KMV / theta sketches
 
 
@@ -202,21 +186,6 @@ def histogram_sketch(
     if keys:
         return per_bin.groupBy(*keys).agg(dense)
     return per_bin.groupBy().agg(dense)
-
-
-def merge_histograms(
-    sketches: DataFrame, n_bins: int, group_cols: list[str] | None = None
-) -> DataFrame:
-    """Element-wise sum of histogram sketch rows — associative/commutative."""
-    zero = F.array_repeat(F.lit(0).cast("long"), n_bins)
-    merged = F.aggregate(
-        F.collect_list("sketch"),
-        zero,
-        lambda acc, x: F.zip_with(acc, x, lambda a, b2: a + b2),
-    ).alias("sketch")
-    if group_cols:
-        return sketches.groupBy(*group_cols).agg(merged)
-    return sketches.agg(merged)
 
 
 def histogram_quantiles(

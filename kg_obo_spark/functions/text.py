@@ -5,18 +5,15 @@ inside whole-stage codegen, no Python in the hot path. Each has an exact ANSI-SQ
 mirror (see __spark_entry__.oracle_sql) so the driver's DuckDB check can verify
 values, not just row counts.
 
-Operators: token counting (whitespace + BPE-ish word-piece regex), quality
-scoring (length/alpha/punct/stopword ratios), language ID (marker-word n-gram
-heuristic), document fingerprinting (normalized md5 + rolling hash).
+Operators: whitespace token counting, quality scoring
+(length/alpha/punct/stopword ratios), language ID (marker-word n-gram
+heuristic), document fingerprinting (normalized md5).
 """
 
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -42,8 +39,7 @@ def tokens(col: Column) -> Column:
 # engine-wide tokens() model is ASCII-whitespace-only. Python str.split()
 # splits on ALL Unicode whitespace (U+00A0, U+2028, ...), which silently
 # diverges on non-ASCII corpora — every Arrow/Pandas stage must tokenize via
-# this helper instead of str.split() so Python stages and JVM stages agree
-# (r6 ADVICE, streaming/curation.py).
+# this helper instead of str.split() so Python stages and JVM stages agree.
 _JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
 
@@ -56,18 +52,6 @@ def py_tokens(s: str) -> list[str]:
 def token_count(col: Column) -> Column:
     """Whitespace token count."""
     return F.size(tokens(col))
-
-
-def wordpiece_count(col: Column) -> Column:
-    """BPE-ish sub-word count: alphabetic runs, digit runs, and single
-    punctuation marks each count as one piece (a cheap proxy for tokenizer
-    load estimation at corpus scale)."""
-    return F.size(
-        F.filter(
-            F.split(col, r"(?<=[^A-Za-z0-9])|(?=[^A-Za-z0-9])"),
-            lambda t: F.trim(t) != "",
-        )
-    )
 
 
 def alpha_ratio(col: Column) -> Column:
@@ -137,47 +121,6 @@ def fingerprint_md5(col: Column) -> Column:
     """Normalized-content fingerprint: md5 of lowercased, whitespace-collapsed,
     trimmed text — the exact-near-dup key."""
     return F.md5(F.trim(F.regexp_replace(F.lower(col), r"\s+", " ")))
-
-
-ROLLING_BASE = np.uint64(1099511628211)
-ROLLING_SEED = np.uint64(14695981039346656037)
-
-
-def rolling_hash_frame(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """FNV-1a-style rolling hash over UTF-8 bytes, vectorized with numpy inside
-    an Arrow batch stage (no per-row Python UDF). Not SQL-expressible —
-    rows-only oracle check. Output adds ``rolling_hash`` (stringified uint64,
-    stable across platforms)."""
-
-    def h(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for s in pdf[text_col].astype(str):
-                # polynomial hash sum(b_i * BASE^(n-1-i)) mod 2^64, fully
-                # numpy-vectorized per string (wraparound is the modulus)
-                arr = np.frombuffer(s.encode("utf-8"), dtype=np.uint8).astype(np.uint64)
-                if len(arr) == 0:
-                    out.append(str(int(ROLLING_SEED)))
-                    continue
-                powers = np.empty(len(arr), dtype=np.uint64)
-                powers[-1] = np.uint64(1)
-                if len(arr) > 1:
-                    powers[:-1] = np.multiply.accumulate(
-                        np.full(len(arr) - 1, ROLLING_BASE, dtype=np.uint64)
-                    )[::-1]
-                acc = np.uint64(
-                    (int(ROLLING_SEED) + int(np.sum(arr * powers, dtype=np.uint64)))
-                    % 2**64
-                )
-                out.append(str(int(acc)))
-            yield pdf.assign(rolling_hash=out)
-
-    in_schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    from kg_obo_spark.partitioning import ensure_scan_parallelism
-
-    return ensure_scan_parallelism(df).mapInPandas(
-        h, schema=f"{in_schema}, rolling_hash string"
-    )
 
 
 def ngram_repetition_stats(

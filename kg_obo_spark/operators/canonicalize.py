@@ -27,8 +27,6 @@ from pyspark.sql import functions as F
 
 from kg_obo_spark.session import local_frame
 
-OBO_IRI_PREFIX = "http://purl.obolibrary.org/obo/"
-
 # OBO:PREFIX_1234567 or OBO:prefix.OWL#PREFIX_1234567 -> PREFIX:1234567
 # (the reference matches the OBO prefix case-insensitively:
 # robot_utils.py:288 `(identifier.split(":"))[0].upper() == "OBO"`)

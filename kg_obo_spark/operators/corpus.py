@@ -133,22 +133,6 @@ def clean_corpus_flags(
     return out
 
 
-def clean_corpus(
-    df: DataFrame,
-    benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    **kwargs,
-) -> DataFrame:
-    """The surviving documents (original schema), i.e. rows whose final
-    cumulative flag is set. Survivor ids come from :func:`clean_corpus_flags`
-    and semi-join back onto the input — the text column never rides through
-    the flag dataflow's shuffles."""
-    flags = clean_corpus_flags(df, benchmark, id_col, text_col, **kwargs)
-    keep = flags.filter(F.col("pass_sample") == 1).select(id_col)
-    return df.join(keep, id_col, "left_semi")
-
-
 def clean_corpus_funnel(
     df: DataFrame,
     benchmark: DataFrame,

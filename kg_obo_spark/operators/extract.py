@@ -234,44 +234,3 @@ def split_valid_turns(transcripts: DataFrame) -> tuple[DataFrame, DataFrame]:
         "conv_id", "turn_idx", F.lit("empty_or_null_text").alias("error")
     )
     return transcripts.filter(~bad), errors
-
-
-def conversation_features(transcripts: DataFrame, mentions: DataFrame) -> DataFrame:
-    """Per-conversation features via grouped-map ``applyInPandas`` — the one
-    stage where a whole conversation must be seen at once (SURVEY §2.8):
-    turn counts, role-switch counts, mean inter-turn gap seconds, and mention
-    density. Grouped on the bucketed conv_id key, so the shuffle is the same
-    co-location the input layout already has."""
-    import pandas as pd
-
-    m_per_turn = mentions.groupBy("conv_id", "turn_idx").agg(
-        F.count("*").alias("n_mentions")
-    )
-    joined = transcripts.select("conv_id", "turn_idx", "role", "ts").join(
-        m_per_turn, ["conv_id", "turn_idx"], "left"
-    ).na.fill({"n_mentions": 0})
-
-    def per_conv(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("turn_idx")
-        roles = pdf["role"].to_numpy()
-        switches = int((roles[1:] != roles[:-1]).sum()) if len(roles) > 1 else 0
-        gaps = pdf["ts"].diff().dt.total_seconds().dropna()
-        return pd.DataFrame(
-            {
-                "conv_id": [pdf["conv_id"].iloc[0]],
-                "n_turns": [len(pdf)],
-                "n_role_switches": [switches],
-                "mean_gap_s": [float(gaps.mean()) if len(gaps) else 0.0],
-                "total_mentions": [int(pdf["n_mentions"].sum())],
-                "mention_density": [float(pdf["n_mentions"].mean())],
-            }
-        )
-
-    return joined.groupBy("conv_id").applyInPandas(
-        per_conv,
-        schema=(
-            "conv_id string, n_turns long, n_role_switches long, "
-            "mean_gap_s double, total_mentions long, mention_density double"
-        ),
-    )
-

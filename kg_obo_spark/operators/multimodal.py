@@ -20,11 +20,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "media_id long, kind string, payload binary, "
-    "meta map<string,string>"
-)
-
 FEATURE_SCHEMA = (
     "media_id long, kind string, n_bytes int, sha256 string, "
     "width int, height int, duration_ms int"
@@ -195,73 +190,4 @@ def decode_stub(
 
     return ensure_scan_parallelism(media).mapInPandas(
         decode, schema=FEATURE_SCHEMA
-    )
-
-
-def resize_stub(
-    media: DataFrame, width: int = 256, height: int = 256, strict: bool = False
-) -> DataFrame:
-    """STUB resize/transcode stage: binary in -> binary out with updated typed
-    metadata (real codecs absent from this container; ``strict=True`` raises
-    at the decoder plug point). The Spark plumbing is real: payload stays an
-    opaque binary column end-to-end, the output schema carries the new
-    dimensions, and the stage is map-only (no shuffle) — at 100 TB the only
-    thing that matters about a resize is that it streams batch-wise and never
-    widens the exchange. Deterministic fake: output payload = sha256(payload)
-    digest bytes repeated to a size proportional to the target area, so
-    downstream size/sanity logic is exercised with stable values."""
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        caps = probe_codecs()
-        target_len = max(1, (width * height) // 1024)
-        for pdf in batches:
-            if strict and not caps["pil"]:
-                raise NotImplementedError(
-                    "media resize requires image codecs not present in this "
-                    "environment; plug a real resizer in here"
-                )
-            payloads = []
-            kinds = pdf["kind"].tolist()
-            for p, kind in zip(pdf["payload"], kinds):
-                raw = bytes(p) if p is not None else b""
-                if caps["pil"] and isinstance(kind, str) and kind.startswith("image/"):
-                    import io
-
-                    import PIL.Image
-
-                    try:
-                        with PIL.Image.open(io.BytesIO(raw)) as img:
-                            buf = io.BytesIO()
-                            img.resize((width, height)).save(buf, format="PNG")
-                            payloads.append(buf.getvalue())
-                            continue
-                    except Exception:
-                        pass  # undecodable payload -> deterministic stub bytes
-                digest = hashlib.sha256(raw).digest()
-                payloads.append((digest * (target_len // len(digest) + 1))[:target_len])
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "payload": payloads,
-                    "width": [width] * len(pdf),
-                    "height": [height] * len(pdf),
-                }
-            )
-
-    return media.mapInPandas(
-        resize,
-        schema="media_id long, kind string, payload binary, width int, height int",
-    )
-
-
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame-sampling *plan*: (media_id, frame_ts_ms) rows via sequence/explode
-    over the (stub-)decoded duration — shows the fan-out shape without codecs."""
-    feats = decode_stub(media)
-    return feats.select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.col("duration_ms"), F.lit(every_ms))
-        ).alias("frame_ts_ms"),
     )

@@ -68,9 +68,7 @@ def corrupt_edges(
 ) -> DataFrame:
     """(src, dst, slot, dst_neg): the deterministic md5-bucket corruption
     stream for normalized (src, dst) edges — map-side only (explode +
-    codegen md5 projection). Shared by the batch operator and
-    :func:`~kg_obo_spark.streaming.negatives.stream_negative_samples`,
-    which filters against a STATIC edge snapshot instead."""
+    codegen md5 projection), before the collision filter."""
     cand = ed.select(
         "src",
         "dst",
@@ -105,9 +103,7 @@ def corrupt_edges(
 
 def filter_corruptions(cand: DataFrame, true_edges: DataFrame) -> DataFrame:
     """The FILTERED setting: drop self-loop corruptions and any corruption
-    colliding with a true (src, dst) edge — one hash anti-join (stream-
-    static when ``cand`` is a streaming frame and ``true_edges`` a committed
-    snapshot)."""
+    colliding with a true (src, dst) edge — one hash anti-join."""
     return (
         cand.filter(F.col("dst_neg") != F.col("src"))
         .join(

@@ -239,8 +239,8 @@ def epoch_shard_assignment(
     100 TB shape: a pure map-side codegen projection — ZERO exchange, never
     a global sort (the classic ``ORDER BY rand()`` epoch shuffle is a
     full-corpus range sort). Materializing the order is the consumer's
-    local problem: :func:`write_epoch_shards` repartitions by shard and
-    sorts WITHIN each shard's task — n_shards independent local sorts."""
+    local problem: repartition by shard and sort WITHIN each shard's task —
+    n_shards independent local sorts."""
     if n_shards <= 0:
         raise ValueError(f"n_shards must be positive, got {n_shards}")
     h = F.md5(F.concat_ws(":", F.lit(str(seed)), F.col(id_col).cast("string")))
@@ -249,28 +249,6 @@ def epoch_shard_assignment(
     )
     return df.select(
         "*", h.alias("order_key"), shard.cast("int").alias("shard")
-    )
-
-
-def write_epoch_shards(
-    df: DataFrame,
-    path: str,
-    n_shards: int = 64,
-    seed: int = 0,
-    id_col: str = "doc_id",
-) -> None:
-    """Materialize one epoch's read order on disk: hive-partitioned by
-    ``shard``, each shard's files internally sorted by ``order_key`` —
-    ``repartition(n_shards, shard)`` + ``sortWithinPartitions`` keeps every
-    sort task-local (one shuffle whose reduce side sorts its own shard;
-    no global range sort, no driver involvement)."""
-    a = epoch_shard_assignment(df, n_shards, seed, id_col)
-    (
-        a.repartition(n_shards, F.col("shard"))
-        .sortWithinPartitions("shard", "order_key")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
     )
 
 
@@ -301,8 +279,8 @@ def repeat_plan(
 
     100 TB shape: pure map-side codegen — CASE over the score, a bounded
     ``explode(sequence(...))`` fan-out (≤ max n_repeats), and the md5
-    projection; ZERO exchange. Materialization is
-    :func:`write_epoch_shards` on the result (task-local shard sorts).
+    projection; ZERO exchange. Materialization is the same task-local
+    shard sort as :func:`epoch_shard_assignment`'s.
     """
     if not tiers:
         raise ValueError("tiers must be non-empty")

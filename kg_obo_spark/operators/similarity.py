@@ -201,33 +201,6 @@ def _lsh_blocked(
     return sigs.select(id_col, chunks).select(id_col, "c.chunk", "c.key")
 
 
-def embedding_lsh_bucket_stats(
-    embeddings: DataFrame,
-    n_planes: int = 32,
-    prefix_bits: int = 8,
-    max_bucket: int = 256,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-(chunk, key) occupancy: (chunk, key, size, truncated, dropped) —
-    the recall-loss ledger for the ``max_bucket`` cap in
-    :func:`embedding_near_dup_lsh`; aggregate into lineage so cap effects are
-    observable, never silent."""
-    sigs = random_hyperplane_signature(embeddings, n_planes, id_col, vec_col)
-    return (
-        _lsh_blocked(sigs, n_planes, prefix_bits, id_col)
-        .groupBy("chunk", "key")
-        .agg(F.count_distinct(id_col).alias("size"))
-        .select(
-            "chunk",
-            "key",
-            "size",
-            (F.col("size") > max_bucket).alias("truncated"),
-            F.greatest(F.col("size") - max_bucket, F.lit(0)).alias("dropped"),
-        )
-    )
-
-
 def embedding_near_dup_lsh(
     embeddings: DataFrame,
     threshold: float = 0.9,
@@ -597,103 +570,6 @@ def ivf_topk(
     )
 
 
-# ------------------------------------------------------------------ IVF index
-
-
-def build_ivf_index(
-    embeddings: DataFrame,
-    out_root: str,
-    n_centroids: int = 16,
-    iters: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Materialize the IVF structure on disk: the assignment table written
-    PARTITIONED BY centroid_id (TableIO hive layout = the Iceberg
-    partition-spec analog) plus a centroids table. A probe then reads only
-    ``nprobe``/``n_centroids`` of the corpus via partition pruning — the
-    on-disk realization of the cell-pruning the in-memory path
-    (:func:`ivf_topk`) does per query. ``iters`` > 0 refines seeds with
-    deterministic Lloyd iterations. Returns the centroid frame."""
-    from kg_obo_spark.sources.tableio import Table
-
-    cents = (
-        kmeans_centroids(embeddings, n_centroids, iters, id_col, vec_col)
-        if iters > 0
-        else deterministic_centroids(embeddings, n_centroids, id_col, vec_col)
-    )
-    assigned = ivf_assign(embeddings, cents, id_col, vec_col)
-    Table(f"{out_root}/ivf_assignment").commit(
-        assigned, partition_by=["centroid_id"], meta={"n_centroids": n_centroids}
-    )
-    Table(f"{out_root}/ivf_centroids").commit(cents)
-    return cents
-
-
-def ivf_index_topk(
-    spark,
-    out_root: str,
-    queries: DataFrame,
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Approximate top-k against a :func:`build_ivf_index` on-disk index.
-
-    The union of the queries' probe cells (a bounded, driver-sized set:
-    |queries| x nprobe ids) becomes a static ``isin`` filter on the partition
-    column, so the scan touches only those hive directories — pinned by
-    tests/test_similarity.py::test_ivf_index_partition_prunes. Results are
-    identical to :func:`ivf_topk` run with the same centroids."""
-    from kg_obo_spark.sources.tableio import Table
-
-    cents = Table(f"{out_root}/ivf_centroids").read(spark)
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("qv")
-    )
-    qcells = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
-            "query_id", "qv", "centroid_id",
-            cosine(F.col("qv"), F.col("centroid_vec")).alias("csim"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("csim").desc(), F.col("centroid_id")
-                )
-            ),
-        )
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "qv", "centroid_id")
-    )
-    probe_cells = sorted(
-        r["centroid_id"] for r in qcells.select("centroid_id").distinct().collect()
-    )
-    assigned = (
-        Table(f"{out_root}/ivf_assignment")
-        .read(spark)
-        .filter(F.col("centroid_id").isin(probe_cells))
-    )
-    scored = assigned.join(F.broadcast(qcells), "centroid_id").select(
-        "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        F.round(cosine(F.col(vec_col), F.col("qv")), 6).alias("sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
-
-
 # ------------------------------------------------- scalar-quantized (int8) ANN
 
 
@@ -972,9 +848,8 @@ def ivf_quantized_topk(
     deterministic centroids.
 
     At 100 TB the assignment table is written partitioned by centroid_id
-    with ``qvec``/``scale`` materialized (:func:`build_ivf_index` layout +
-    quantized columns): a probe then reads nprobe/n_centroids of a 4x
-    smaller corpus — the two factors multiply.
+    with ``qvec``/``scale`` materialized: a probe then reads
+    nprobe/n_centroids of a 4x smaller corpus — the two factors multiply.
     """
     cents = (
         centroids

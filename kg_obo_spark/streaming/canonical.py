@@ -28,7 +28,7 @@ is delta-sized even for a 1e9-entity registry. Readers resolve
 latest-epoch-wins per id (:func:`read_assignment`); every ``compact_every``
 epochs the sink folds the accumulated deltas into one full snapshot so the
 manifest and the reader's union stay bounded. Epoch tags make a replayed
-batch a no-op (exactly-once, matching ingest.py's sink).
+batch a no-op (exactly-once).
 
 The resolved assignment equals a from-scratch connected-components run over
 all edges seen (pinned by test): incremental star-contraction preserves

@@ -8,7 +8,7 @@ Structured Streaming, with the same two functions:
 - per micro-batch: :func:`~kg_obo_spark.operators.materialize.co_mention_batch`
   (fused Arrow scan -> mentioned ids + co-mention pairs, one distinct) and
   one append commit of its rows to ``co_edges``, tagged with the epoch, so a
-  replayed micro-batch is a no-op (exactly-once, like ingest.py).
+  replayed micro-batch is a no-op (exactly-once).
 - at read time (:func:`read_kg_edges`):
   :func:`~kg_obo_spark.operators.materialize.kg_from_registry` over the
   accumulated rows — co edges = distinct over the appended pairs; is_a edges

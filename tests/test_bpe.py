@@ -1,84 +1,11 @@
-"""Distributed BPE learning pinned against a sequential pure-Python replay.
-
-The operator's contract is exact determinism: integer pair counts plus the
-(count DESC, a, b) tie-break make the learned rules — and therefore every
-downstream segmentation — identical across partitionings and engines.
-"""
-
-import pytest
+"""BPE pair statistics, and the tokenizer seam's ``counts_frame`` stage."""
 
 from kg_obo_spark.functions.bpe import (
-    LearnedBPE,
     char_symbols,
-    learn_bpe,
     pair_counts,
     word_frequencies,
 )
-from kg_obo_spark.functions.text import py_tokens
-
-
-def py_learn_bpe(texts, num_merges, min_freq=2):
-    """Sequential reference: same recurrence, dict-based."""
-    wf = {}
-    for t in texts:
-        for w in py_tokens(t):
-            wf[w] = wf.get(w, 0) + 1
-    syms = {w: list(w) for w in wf}
-    merges = []
-    for _ in range(num_merges):
-        pc = {}
-        for w, s in syms.items():
-            for i in range(len(s) - 1):
-                pc[(s[i], s[i + 1])] = pc.get((s[i], s[i + 1]), 0) + wf[w]
-        if not pc:
-            break
-        best = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
-        if best[1] < min_freq:
-            break
-        (a, b) = best[0]
-        merges.append((a, b))
-        for w in syms:
-            s, out, i = syms[w], [], 0
-            while i < len(s):
-                if i < len(s) - 1 and s[i] == a and s[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(s[i])
-                    i += 1
-            syms[w] = out
-    return merges
-
-
-CORPUS = [
-    "the fast table scan",
-    "the faster the better",
-    "fast fast fast table",
-    "a table value scan scans the table",
-    "scan the value",
-]
-
-
-def test_learn_bpe_matches_python_replay(spark):
-    df = spark.createDataFrame([(t,) for t in CORPUS], "text string")
-    assert learn_bpe(df, num_merges=6) == py_learn_bpe(CORPUS, 6)
-
-
-def test_learn_bpe_partitioning_independent(spark):
-    df = spark.createDataFrame([(t,) for t in CORPUS], "text string")
-    assert learn_bpe(df.repartition(5), num_merges=4) == learn_bpe(
-        df.coalesce(1), num_merges=4
-    )
-
-
-def test_learn_bpe_min_freq_stops_early(spark):
-    df = spark.createDataFrame([("ab cd",)], "text string")
-    # every pair occurs once -> below min_freq=2, no rules learned
-    assert learn_bpe(df, num_merges=4) == []
-    # with min_freq=1 the (a,b)-ascending tie-break picks deterministically
-    assert learn_bpe(df, num_merges=1, min_freq=1) == py_learn_bpe(
-        ["ab cd"], 1, min_freq=1
-    )
+from kg_obo_spark.functions.tokenizer import GreedyWordpiece
 
 
 def test_pair_counts_weighted_by_word_freq(spark):
@@ -91,36 +18,8 @@ def test_pair_counts_weighted_by_word_freq(spark):
     assert pc == {("a", "a"): 2, ("a", "b"): 1}
 
 
-def test_learned_bpe_encode_applies_ranks_in_order(spark):
-    tok = LearnedBPE([("a", "b"), ("ab", "c")])
-    assert tok.encode_word("abc") == ("abc",)
-    assert tok.encode_word("abab") == ("ab", "ab")
-    assert tok.encode_word("xaby") == ("x", "ab", "y")
-    assert tok.encode("ab abc") == ["ab", "abc"]
-    assert tok.n_tokens("ab abc zz") == 4
-
-
-def test_learned_bpe_plugs_into_tokenizer_seam(spark):
-    from kg_obo_spark.operators.packing import pack_sequences
-
-    df = spark.createDataFrame(
-        [(i, CORPUS[i % len(CORPUS)]) for i in range(10)],
-        "doc_id long, text string",
-    )
-    rules = learn_bpe(df, num_merges=5)
-    assert rules  # the corpus repeats heavily; merges must be found
-    tok = LearnedBPE(rules)
-    packed = pack_sequences(df, budget=12, tokenizer=tok)
-    # every document's packed token total equals the tokenizer's own count
-    totals = {}
-    for r in packed.select("doc_id", "n_tokens").collect():
-        totals[r.doc_id] = totals.get(r.doc_id, 0) + r.n_tokens
-    for i in range(10):
-        assert totals[i] == tok.n_tokens(CORPUS[i % len(CORPUS)])
-
-
 def test_counts_frame_inherited_stage_matches_encode(spark):
-    tok = LearnedBPE([("t", "h"), ("th", "e")])
+    tok = GreedyWordpiece()
     df = spark.createDataFrame(
         [(0, "the other"), (1, "")], "doc_id long, text string"
     )

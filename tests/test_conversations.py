@@ -269,42 +269,6 @@ def test_dedup_conversations_two_exchanges(spark):
     assert "Join" not in plan
 
 
-def test_write_sft_jsonl_roundtrip(spark, tmp_path):
-    import json
-    import os
-
-    from kg_obo_spark.operators.conversations import sft_examples
-    from kg_obo_spark.sources.sft import write_sft_jsonl
-
-    ex = sft_examples(_tr(spark))
-    out = str(tmp_path / "sft")
-    write_sft_jsonl(ex, out, n_shards=2)
-
-    # every line is standalone JSON with exactly the example's fields
-    parts = [f for f in os.listdir(out) if f.startswith("part-")]
-    assert len(parts) == 2
-    objs = []
-    for p in parts:
-        with open(os.path.join(out, p)) as fh:
-            for line in fh:
-                objs.append(json.loads(line))
-    want = {(r.conv_id, r.turn_idx): r for r in ex.collect()}
-    assert len(objs) == len(want) == 4
-    for o in objs:
-        r = want[(o["conv_id"], o["turn_idx"])]
-        assert o["context"] == r.context and o["response"] == r.response
-        assert set(o) == {"conv_id", "turn_idx", "context", "response",
-                          "n_context_turns"}
-
-    # spark can read its own output back
-    back = spark.read.json(out)
-    assert back.count() == 4
-
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="n_shards"):
-        write_sft_jsonl(ex, str(tmp_path / "x"), n_shards=0)
-
-
 def test_conversation_splits_leak_free_and_plan(spark):
     from kg_obo_spark.operators.conversations import assign_conversation_splits
 

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from kg_obo_spark.operators.corpus import (
     CLEAN_STAGES,
-    clean_corpus,
     clean_corpus_flags,
     clean_corpus_funnel,
 )
@@ -91,15 +90,11 @@ def test_survivors_and_funnel_consistency(spark):
     counts = [funnel[f"n_{s}"] for s in CLEAN_STAGES]
     assert counts == sorted(counts, reverse=True)
     assert 0 < counts[-1] < funnel["n_input"]  # discriminating on this corpus
-    # survivors frame == flag-selected ids, original schema preserved
-    surv = clean_corpus(docs, bench, **kw)
-    assert surv.columns == docs.columns
-    got = {x["doc_id"] for x in surv.select("doc_id").collect()}
-    want = set(flags[flags["pass_sample"] == 1]["doc_id"])
-    assert got == want
     # sample stage agrees with the standalone bucket function
     kept_buckets = (
-        surv.select(sample_bucket(F.col("doc_id")).alias("b"))
+        clean_corpus_flags(docs, bench, **kw)
+        .filter(F.col("pass_sample") == 1)
+        .select(sample_bucket(F.col("doc_id")).alias("b"))
         .agg(F.max("b"))
         .first()[0]
     )

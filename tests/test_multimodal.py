@@ -5,7 +5,6 @@ from pyspark.sql import functions as F
 
 from kg_obo_spark.operators.multimodal import (
     decode_stub,
-    frame_sample_plan,
     media_from_documents,
     payload_stats,
 )
@@ -44,36 +43,6 @@ def test_decode_strict_raises(spark):
     media = media_from_documents(_docs(spark))
     with pytest.raises(Exception, match="NotImplementedError|codecs"):
         decode_stub(media, strict=True).collect()
-
-
-def test_frame_sample_plan(spark):
-    media = media_from_documents(_docs(spark))
-    plan = frame_sample_plan(media, every_ms=100000)
-    rows = plan.groupBy("media_id").count().collect()
-    assert all(r["count"] >= 1 for r in rows)
-
-
-def test_resize_stub_plumbing(spark):
-    """Binary in -> binary out with typed dims; deterministic payloads; strict
-    mode raises at the codec plug point."""
-    import pytest
-
-    from kg_obo_spark.operators.multimodal import media_from_documents, resize_stub
-
-    docs = spark.createDataFrame(
-        [(1, "hello world", "s", "en"), (2, "other text", "s", "en")],
-        "doc_id long, text string, source string, lang string",
-    )
-    media = media_from_documents(docs)
-    out = resize_stub(media, width=128, height=128).collect()
-    assert {r["media_id"] for r in out} == {1, 2}
-    assert all(r["width"] == 128 and r["height"] == 128 for r in out)
-    assert all(isinstance(r["payload"], (bytes, bytearray)) and len(r["payload"]) == 16 for r in out)
-    # deterministic: same input -> same bytes
-    out2 = resize_stub(media, width=128, height=128).collect()
-    assert {bytes(r["payload"]) for r in out} == {bytes(r["payload"]) for r in out2}
-    with pytest.raises(Exception, match="NotImplementedError|codecs"):
-        resize_stub(media, strict=True).collect()
 
 
 def _tiny_png(w=3, h=2):

@@ -1,14 +1,7 @@
-"""Registry 3-way filter (S1/P1) + conversation features (grouped map) +
-input-error diversion (A8)."""
-
-from pyspark.sql import functions as F
+"""Registry 3-way filter (S1/P1) + input-error diversion (A8)."""
 
 from kg_obo_spark.datagen import generate_transcripts
-from kg_obo_spark.operators.extract import (
-    conversation_features,
-    extract_mentions,
-    split_valid_turns,
-)
+from kg_obo_spark.operators.extract import extract_mentions, split_valid_turns
 from kg_obo_spark.operators.registry import filter_registry, registry_from_entries
 
 
@@ -41,15 +34,3 @@ def test_split_valid_turns_counts_errors(spark, onto):
     assert valid.count() == tr.count()
     # extraction tolerates the raw frame too (nulls skipped, no crash)
     extract_mentions(with_bad, onto).count()
-
-
-def test_conversation_features(spark, onto):
-    tr = generate_transcripts(spark, n_convs=25, seed=8, ontology=onto).cache()
-    m = extract_mentions(tr, onto)
-    feats = conversation_features(tr, m)
-    assert feats.count() == tr.select("conv_id").distinct().count()
-    row = feats.orderBy("conv_id").first()
-    assert row["n_turns"] >= 2
-    assert row["mean_gap_s"] == 30.0  # datagen emits 30s cadence
-    total = feats.agg(F.sum("total_mentions")).first()[0]
-    assert total == m.count()

@@ -132,37 +132,6 @@ def test_epoch_shard_assignment_map_only_and_deterministic(spark):
     assert len(sizes) == 8
 
 
-def test_write_epoch_shards_sorted_within_shard(spark, tmp_path):
-    """The materialized epoch is hive-partitioned by shard with each shard's
-    rows readable in order_key order (task-local sorts, no global sort)."""
-    from kg_obo_spark.operators.sampling import (
-        epoch_shard_assignment,
-        write_epoch_shards,
-    )
-
-    df = spark.range(300).select(F.col("id").alias("doc_id"))
-    out = str(tmp_path / "epoch0")
-    write_epoch_shards(df, out, n_shards=4, seed=3)
-    back = spark.read.parquet(out)
-    assert back.count() == 300
-    assert {r["shard"] for r in back.select("shard").distinct().collect()} == {0, 1, 2, 3}
-    # within every shard file the rows are already in order_key order
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    for f in _glob.glob(f"{out}/shard=*/*.parquet"):
-        ks = pq.read_table(f, columns=["order_key"])["order_key"].to_pylist()
-        assert ks == sorted(ks)
-    # assignment parity with the in-memory operator
-    want = {
-        r["doc_id"]: r["shard"]
-        for r in epoch_shard_assignment(df, n_shards=4, seed=3).collect()
-    }
-    got = {r["doc_id"]: r["shard"] for r in back.collect()}
-    assert got == want
-
-
 def test_mixture_rates_exact_fraction_reference(spark):
     """Rates match an exact-rational reference: anchor = argmax w/n (ties ->
     smaller stratum), rate_d = floor(MOD * (w_d/n_d) / (w_a/n_a))."""

@@ -5,7 +5,6 @@ from pyspark.sql import functions as F
 from kg_obo_spark.functions.sketches import (
     estimate,
     merge_sketches,
-    partition_sketch_lineage,
     sketch_distinct,
 )
 from kg_obo_spark.sources.tableio import Table
@@ -22,7 +21,9 @@ def test_partition_merge_equals_whole(spark):
     # associativity: union of per-partition sketches == one whole-frame sketch
     df = spark.range(20_000).select((F.col("id") % 3777).alias("v")).repartition(8)
     whole = sketch_distinct(df, "v").select(estimate("sketch")).first()["estimate"]
-    parts = partition_sketch_lineage(df, "v")
+    parts = sketch_distinct(
+        df.withColumn("partition_id", F.spark_partition_id()), "v", ["partition_id"]
+    )
     assert parts.count() == 8
     merged = merge_sketches(parts).select(estimate("sketch")).first()["estimate"]
     assert merged == whole
@@ -102,14 +103,13 @@ def test_kmv_estimation_mode_accuracy(spark):
 
 
 def test_histogram_sketch_merge_and_quantiles(spark):
-    """Shard-built histograms merge to the direct histogram; quantile bins
-    match a brute-force rank computation under the same left-edge rule."""
+    """Per-group histograms count every row; quantile bins match a
+    brute-force rank computation under the same left-edge rule."""
     from pyspark.sql import functions as F
 
     from kg_obo_spark.functions.sketches import (
         histogram_quantiles,
         histogram_sketch,
-        merge_histograms,
     )
 
     N, BINS, LO, HI = 4000, 32, 0.0, 100.0
@@ -119,12 +119,6 @@ def test_histogram_sketch_merge_and_quantiles(spark):
     ).repartition(8)
     direct = {r["g"]: list(r["sketch"]) for r in
               histogram_sketch(df, "v", LO, HI, BINS, ["g"]).collect()}
-    sharded = histogram_sketch(
-        df.withColumn("shard", F.pmod(F.col("v").cast("long"), F.lit(4))),
-        "v", LO, HI, BINS, ["g", "shard"])
-    merged = {r["g"]: list(r["sketch"]) for r in
-              merge_histograms(sharded, BINS, ["g"]).collect()}
-    assert direct == merged
     assert all(sum(s) == N // 3 + (1 if g < N % 3 else 0) for g, s in direct.items())
 
     sk = histogram_sketch(df, "v", LO, HI, BINS, ["g"])

@@ -6,9 +6,7 @@ from kg_obo_spark.functions.text import (
     fingerprint_md5,
     lang_id,
     quality_score,
-    rolling_hash_frame,
     token_count,
-    wordpiece_count,
 )
 
 
@@ -21,11 +19,6 @@ def test_token_count(spark):
     assert _one(spark, "a b  c", token_count(F.col("text"))) == 3
     assert _one(spark, "   ", token_count(F.col("text"))) == 0
     assert _one(spark, "", token_count(F.col("text"))) == 0
-
-
-def test_wordpiece_count(spark):
-    # "spark-4.1 rocks!" -> spark, -, 4, ., 1, rocks, !
-    assert _one(spark, "spark-4.1 rocks!", wordpiece_count(F.col("text"))) == 7
 
 
 def test_quality_score_monotone_in_length(spark):
@@ -47,15 +40,6 @@ def test_fingerprint_normalization(spark):
     b = _one(spark, "  hello world ", fingerprint_md5(F.col("text")))
     c = _one(spark, "hello worlds", fingerprint_md5(F.col("text")))
     assert a == b != c
-
-
-def test_rolling_hash_deterministic(spark):
-    df = spark.createDataFrame([(1, "abc"), (2, "abd"), (3, "abc")], "id long, text string")
-    out = {r["id"]: r["rolling_hash"] for r in rolling_hash_frame(df).collect()}
-    assert out[1] == out[3] != out[2]
-    # stable value (platform-independent FNV-ish polynomial)
-    again = {r["id"]: r["rolling_hash"] for r in rolling_hash_frame(df).collect()}
-    assert out == again
 
 
 def test_ngram_repetition_stats_vs_python(spark):

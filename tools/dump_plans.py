@@ -203,7 +203,7 @@ def main() -> None:
             "Epoch shuffle (map-only)",
             "Deterministic training read order as a pure projection: order_key =\n"
             "md5(seed:id), shard = first-8-hex mod N — ZERO Exchange, never the\n"
-            "ORDER BY rand() global range sort. write_epoch_shards materializes\n"
+            "ORDER BY rand() global range sort. A consumer materializes it\n"
             "with repartition(shard) + sortWithinPartitions: n_shards task-local\n"
             "sorts.",
             fmt(_epoch_plan(spark)),
